@@ -58,6 +58,37 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _timed(dfs: list, reps: int) -> list[list[float]]:
+    """The one timing loop: warm every frame once (codegen, Python-worker
+    spawn and AQE state are session artifacts, not operator cost — timing
+    them makes a number depend on where in the suite it runs), then
+    ``reps`` rounds that time each frame in turn.  Several frames are
+    INTERLEAVED, so a noisy host window degrades all of them alike.
+    Returns the raw wall times, one list per frame; each caller keeps its
+    own reduction."""
+    for df in dfs:
+        _materialize(df)
+    raw: list[list[float]] = [[] for _ in dfs]
+    for _ in range(reps):
+        for df, times in zip(dfs, raw):
+            t0 = time.time()
+            _materialize(df)
+            times.append(time.time() - t0)
+    return raw
+
+
+def _session(app_name: str, master: str, shuffle_partitions: int):
+    from ocr_auto_label_spark.session import build_spark
+
+    spark = build_spark(app_name=app_name, master=master,
+                        shuffle_partitions=shuffle_partitions)
+    # the bench artifact must end in one clean JSON line: silence JVM-side
+    # logging (incl. the benign PythonAccumulatorV2 flush trace that a
+    # stopping session can emit mid-suite)
+    spark.sparkContext.setLogLevel("OFF")
+    return spark
+
+
 def _sf_label(sf_dir: str) -> float:
     for tok in ("0.001", "0.01", "0.1"):
         if tok in sf_dir:
@@ -66,35 +97,20 @@ def _sf_label(sf_dir: str) -> float:
 
 
 def run_suite(master: str, shuffle_partitions: int) -> dict:
-    from ocr_auto_label_spark.session import build_spark
     from ocr_auto_label_spark.entry_queries import build_queries, _sf_turns
     from ocr_auto_label_spark.datagen import transcripts_parquet
 
     transcripts_parquet(_sf_turns(SF_DIR))  # pre-generate outside timing
-    spark = build_spark(app_name=f"bench-{master}", master=master,
-                        shuffle_partitions=shuffle_partitions)
-    # the bench artifact must end in one clean JSON line: silence JVM-side
-    # logging (incl. the benign PythonAccumulatorV2 flush trace that a
-    # stopping session can emit mid-suite)
-    spark.sparkContext.setLogLevel("OFF")
+    spark = _session(f"bench-{master}", master, shuffle_partitions)
     queries = build_queries()
     timings: dict[str, float] = {}
     breakdown: dict[str, dict[str, float]] = {}
     n_turns = _sf_turns(SF_DIR)
     for name in BENCH_QUERIES:
         df = queries[name](spark, SF_DIR)
-        # warm every query once: codegen + python-worker spawn + AQE state
-        # are session artifacts, not operator cost — timing them makes the
-        # numbers depend on where in the suite a query runs.  Best-of-2
-        # timed runs: single-run timings showed 2-3× host-variance
-        # outliers on the applyInPandas stages (BENCH/BASELINE.md r3).
-        _materialize(df)
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            _materialize(df)
-            best = min(best, time.time() - t0)
-        timings[name] = round(best, 3)
+        # best-of-2: single-run timings showed 2-3× host-variance outliers
+        # on the applyInPandas stages (BENCH/BASELINE.md r3)
+        timings[name] = round(min(_timed([df], 2)[0]), 3)
         if name in VARIANT_BREAKDOWN:
             breakdown[name] = _variant_breakdown(df, VARIANT_BREAKDOWN[name])
     extraction_sec = timings["extract_flagship"]
@@ -139,14 +155,8 @@ VARIANT_BREAKDOWN = {
 def _variant_breakdown(df, variants: list[str]) -> dict[str, float]:
     from pyspark.sql import functions as F
 
-    per: dict[str, float] = {}
-    for v in variants:
-        sub = df.filter(F.col("variant") == v)
-        _materialize(sub)  # warm the pruned plan
-        t0 = time.time()
-        _materialize(sub)
-        per[v] = round(time.time() - t0, 3)
-    return per
+    subs = [df.filter(F.col("variant") == v) for v in variants]
+    return {v: round(t, 3) for v, (t,) in zip(variants, _timed(subs, 1))}
 
 
 def _flagship_df(spark, path: str):
@@ -163,25 +173,13 @@ def _flagship_df(spark, path: str):
 
 def _timed_session(master: str, shuffle_partitions: int, path: str,
                    timed_reps: int = 2) -> list[float]:
-    """One Spark session at ``master``: warm the flagship once (codegen +
-    python-worker spawn are session artifacts, not operator cost), then
-    ``timed_reps`` timed materializations.  Returns the raw wall times."""
-    from ocr_auto_label_spark.session import build_spark
-
-    spark = build_spark(app_name=f"scale-{master}", master=master,
-                        shuffle_partitions=shuffle_partitions)
-    spark.sparkContext.setLogLevel("OFF")
+    """One Spark session at ``master``: the flagship's raw wall times."""
+    spark = _session(f"scale-{master}", master, shuffle_partitions)
     try:
-        df = _flagship_df(spark, path)
-        _materialize(df)  # warmup
-        times = []
-        for _ in range(timed_reps):
-            t0 = time.time()
-            _materialize(df)
-            times.append(round(time.time() - t0, 3))
+        (times,) = _timed([_flagship_df(spark, path)], timed_reps)
     finally:
         spark.stop()
-    return times
+    return [round(t, 3) for t in times]
 
 
 def scaling_block(n_turns: int) -> dict:
@@ -265,12 +263,9 @@ def _scale_legs(app_name: str, base_turns: int, factor: int, df_builder) -> dict
     the flagship and shuffle artifacts stay comparable.  ``df_builder``
     maps (spark, path) -> DataFrame for the plan under test."""
     from ocr_auto_label_spark.datagen import replicated_transcripts, transcripts_parquet
-    from ocr_auto_label_spark.session import build_spark
 
     base_path = transcripts_parquet(base_turns)
-    spark = build_spark(app_name=app_name, master=f"local[{CPUS}]",
-                        shuffle_partitions=max(CPUS, 32))
-    spark.sparkContext.setLogLevel("OFF")
+    spark = _session(app_name, f"local[{CPUS}]", max(CPUS, 32))
     try:
         big_path = replicated_transcripts(spark, base_turns, factor)
         legs = {}
@@ -278,13 +273,7 @@ def _scale_legs(app_name: str, base_turns: int, factor: int, df_builder) -> dict
             ("base", base_path, base_turns),
             ("scaled", big_path, base_turns * factor),
         ):
-            df = df_builder(spark, path)
-            _materialize(df)  # warm
-            best = float("inf")
-            for _ in range(2):
-                t0 = time.time()
-                _materialize(df)
-                best = min(best, time.time() - t0)
+            best = min(_timed([df_builder(spark, path)], 2)[0])
             legs[name] = {"turns": n, "sec": round(best, 3),
                           "turns_per_sec": round(n / best, 1)}
     finally:
@@ -339,7 +328,6 @@ def skew_run(n_turns: int) -> dict:
     task) vs salted_repartition (pmod(xxhash64(conv_id, turn_idx)) spreads
     it).  Wall-clock ratio quantifies what salting buys on a
     conv-clustered layout."""
-    from ocr_auto_label_spark.session import build_spark
     from ocr_auto_label_spark.datagen import transcripts_parquet
     from ocr_auto_label_spark.plans.extraction_pipeline import (
         extract_candidates_flat,
@@ -347,9 +335,7 @@ def skew_run(n_turns: int) -> dict:
     )
 
     path = transcripts_parquet(n_turns)
-    spark = build_spark(app_name="bench-skew", master=f"local[{CPUS}]",
-                        shuffle_partitions=max(CPUS, 32))
-    spark.sparkContext.setLogLevel("OFF")
+    spark = _session("bench-skew", f"local[{CPUS}]", max(CPUS, 32))
     df = spark.read.parquet(path)
     plans = {
         "conv_partitioned_sec": extract_candidates_flat(
@@ -363,16 +349,9 @@ def skew_run(n_turns: int) -> dict:
     # measurement flips the ratio, while alternating legs degrade both
     # sides of it); best-of-3 per leg — host interference only ever slows
     # a run, so per-leg bests upward-bound the noise-free times.
-    times: dict[str, float] = {k: float("inf") for k in plans}
-    for out in plans.values():
-        _materialize(out)  # warm both before any timing
-    for _ in range(3):
-        for name, out in plans.items():
-            t0 = time.time()
-            _materialize(out)
-            times[name] = min(times[name], time.time() - t0)
+    raw = _timed(list(plans.values()), 3)
     spark.stop()
-    legs = {k: round(v, 3) for k, v in times.items()}
+    legs = {k: round(min(v), 3) for k, v in zip(plans, raw)}
     return {
         "turns": n_turns,
         **legs,
@@ -380,68 +359,13 @@ def skew_run(n_turns: int) -> dict:
     }
 
 
-def bpe_block(n_turns: int = 20_000) -> dict:
-    """BPE trainer scaling evidence (VERDICT r4 #4): the incremental
-    (delta-update) trainer vs the per-merge-job loop.  Both run at the
-    same merge count for a MEASURED same-work speedup (identity of the
-    merge tables is asserted right here, not just in pytest), then the
-    fast trainer runs the production-shaped merges=256 — the size the
-    sequential loop cannot sustain (its per-merge cost, also reported,
-    projects it to minutes)."""
-    from ocr_auto_label_spark.datagen import transcripts_parquet
-    from ocr_auto_label_spark.operators.bpe import bpe_train, bpe_train_fast
-    from ocr_auto_label_spark.session import build_spark
-
-    path = transcripts_parquet(n_turns)
-    spark = build_spark(app_name="bench-bpe", master=f"local[{CPUS}]",
-                        shuffle_partitions=max(CPUS, 32))
-    spark.sparkContext.setLogLevel("OFF")
-    try:
-        df = spark.read.parquet(path)
-        df.count()  # warm the scan (page cache + session ramp)
-        eq = 16
-        t0 = time.time()
-        m_loop, w_loop = bpe_train(df, eq)
-        w_loop.count()
-        loop_sec = time.time() - t0
-        t0 = time.time()
-        m_fast, w_fast = bpe_train_fast(df, eq)
-        w_fast.count()
-        fast_eq_sec = time.time() - t0
-        if m_fast != m_loop:
-            raise AssertionError("bpe trainer identity violated in bench")
-        t0 = time.time()
-        m256, w256 = bpe_train_fast(df, 256)
-        vocab_words = w256.count()
-        fast256_sec = time.time() - t0
-    finally:
-        spark.stop()
-    return {
-        "turns": n_turns,
-        "vocab_words": vocab_words,
-        "merges_equal_work": eq,
-        "loop_sec": round(loop_sec, 3),
-        "fast_sec": round(fast_eq_sec, 3),
-        "speedup_same_merges": round(loop_sec / fast_eq_sec, 1),
-        "loop_sec_per_merge": round(loop_sec / eq, 3),
-        "fast_merges_256_sec": round(fast256_sec, 3),
-        "loop_merges_256_projected_sec": round(loop_sec / eq * 256, 1),
-        "identity_checked": True,
-    }
-
-
 def main() -> None:
     if not os.path.isdir(SF_DIR):
         sys.exit(f"error: SPARK_GRAFT_SF_DIR does not exist: {SF_DIR}")
     p = argparse.ArgumentParser()
-    p.add_argument("--scaling", action="store_true",
-                   help="(kept for compatibility; scaling now runs by default)")
     p.add_argument("--no-scaling", action="store_true",
                    help="skip the N vs 4N cores efficiency measurement")
     args = p.parse_args()
-    if args.scaling and args.no_scaling:
-        p.error("--scaling and --no-scaling are mutually exclusive")
-    args.scaling = not args.no_scaling
 
     main_run = run_suite(f"local[{CPUS}]", max(CPUS, 32))
     out = {
@@ -455,7 +379,7 @@ def main() -> None:
         "extraction_turns": main_run["turns"],
         "cpus": CPUS,
     }
-    if args.scaling:
+    if not args.no_scaling:
         # pairs (1,4) and (2,8) sit fully inside this 32-core host's
         # capacity (≤8 busy cores leaves the JVM headroom and avoids the
         # host-level per-core frequency/bandwidth decay measured in
@@ -478,7 +402,6 @@ def main() -> None:
         out["skew"] = skew_run(
             int(os.environ.get("SPARK_GRAFT_SKEW_TURNS", str(n_turns)))
         )
-        out["bpe"] = bpe_block()
     print(json.dumps(out))
 
 

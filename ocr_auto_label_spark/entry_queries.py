@@ -2067,7 +2067,7 @@ def _dedup_exact_and_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_tokens").alias("v2"),
     )
     # BPE tokenizer training (Sennrich et al. 2016) on the same corpus:
-    # the ordered merge table (one bounded driver row per step), the
+    # the ordered merge table (one driver row per step), the
     # final symbol inventory, and the per-doc token counts after merges
     # — the DuckDB oracle replays the full training loop as a static
     # chained-CTE program (argmax pair per step, then the same
@@ -2078,12 +2078,9 @@ def _dedup_exact_and_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_vocab,
     )
 
-    # the per-merge-job loop, deliberately: this entry's oracle replays
-    # THAT algorithm CTE-for-CTE, and its localCheckpoint'd vocabulary
-    # frame re-reads faster in the three bpe union legs than the fast
-    # trainer's driver-local relation (measured: encode leg 0.3 → 0.97 s
-    # with the swap).  The incremental trainer is exercised by the
-    # curation job, the bench bpe block, and the pytest identity.
+    # the oracle replays the same greedy (count DESC, a, b) argmax chain
+    # CTE-for-CTE.  The trained vocabulary is a sized LocalRelation, so
+    # the encode leg's join broadcasts the vocabulary, not the documents
     bmerges, bwords = bpe_train(docs, _BPE_MERGES)
     bpe_merge = spark.createDataFrame(
         [

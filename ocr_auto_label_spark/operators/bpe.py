@@ -8,42 +8,35 @@ distinct-value compression every heavy operator here uses (a 100 TB
 corpus has ~10⁷–10⁸ distinct words, not 10¹²; all pair counting happens
 on that vocabulary table, never on the token stream).
 
-Representation trick that keeps BOTH engines (Spark and the DuckDB
-oracle) on identical, trivially-deterministic code: a word's symbol
-sequence is a STRING — symbols joined by two spaces, padded with one
-space on each end (symbols never contain whitespace, by tokenization).
-One merge step is then a single literal ``replace(seq, ' a  b ', ' ab ')``:
-`replace` scans left-to-right non-overlapping in Spark (Java
-``String.replace``), DuckDB, and Python alike, which is EXACTLY the
-greedy BPE merge semantics including the ``a a a → (aa) a`` case, and
-the one-vs-two-space framing makes cross-symbol-boundary false matches
-impossible ('xa b' does not contain ' a  b ').
-
-Each training step is one map-side-combined pair-count aggregate over
-the vocabulary plus a SINGLE-ROW driver pull (the argmax pair — the
-bounded-pull pattern of connected_components/IVF); ties break by
+Shape (the production tokenizer-trainer design — HuggingFace tokenizers /
+SentencePiece train exactly this way): ONE map-side-combined word count
+runs distributed, the top ``max_vocab`` words by (cnt DESC, word) are a
+BOUNDED driver pull, and the merge loop is the standard incremental
+algorithm (Sennrich's reference ``learn_bpe`` index structure): pair
+counts plus a pair→words inverted index, updated per merge by re-counting
+ONLY the words whose sequence contains the merged pair.  Ties break by
 (count DESC, a ASC, b ASC), a total order, so training is bit-
-reproducible at any parallelism and replayable as a static chained-CTE
-SQL oracle.  The training loop re-checkpoints the vocabulary every 25
-merges so the replace-chain lineage stays bounded at any ``n_merges``
-(same pattern as the CC pointer-jumping loop).
+reproducible and replayable as a static chained-CTE SQL oracle.
+
+A word's symbol sequence is stored as a STRING — symbols joined by two
+spaces, padded with one space on each end (symbols never contain
+whitespace, by tokenization).  The DuckDB oracle replays one merge as a
+single literal ``replace(seq, ' a  b ', ' ab ')``: ``replace`` scans
+left-to-right non-overlapping, which is EXACTLY the greedy merge of
+:func:`_merge_symbols` including the ``a a a → (aa) a`` case, and the
+one-vs-two-space framing makes cross-symbol-boundary false matches
+impossible ('xa b' does not contain ' a  b ').
 """
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ocr_auto_label_spark.operators.textstats import word_tokens
-
-
-def _q(s: str) -> str:
-    """Escape a symbol for embedding in a single-quoted Spark SQL
-    literal.  Backslashes FIRST: Spark string literals process escape
-    sequences, so an unescaped '\\' would corrupt the merge pattern
-    (silently un-merging the real pair and potentially merging an
-    unrelated one) on corpora with code/paths/LaTeX tokens."""
-    return s.replace("\\", "\\\\").replace("'", "''")
 
 
 def word_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -56,88 +49,8 @@ def word_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-_INIT_SEQ = (
-    "concat(' ', array_join(transform(sequence(1, length(word)), "
-    "i -> substr(word, i, 1)), '  '), ' ')"
-)
 # split back to symbols: trim the outer pad, split on the 2-space joiner
 _SYMS = "split(trim(seq), '  ')"
-
-
-def _pair_counts(words: DataFrame) -> DataFrame:
-    """(a, b, total): adjacent-symbol pair frequencies, weighted by word
-    count.  The sequence(1, n-1) is guarded — Spark's sequence DESCENDS
-    when start > stop instead of being empty."""
-    pairs = F.expr(
-        f"CASE WHEN size({_SYMS}) >= 2 THEN "
-        f"transform(sequence(1, size({_SYMS}) - 1), "
-        f"i -> struct(element_at({_SYMS}, i) AS a, "
-        f"element_at({_SYMS}, i + 1) AS b)) "
-        "ELSE array() END"
-    )
-    return (
-        words.select("cnt", F.explode(pairs).alias("p"))
-        .groupBy("p.a", "p.b")
-        .agg(F.sum("cnt").alias("total"))
-    )
-
-
-def bpe_train(
-    df: DataFrame, n_merges: int, text_col: str = "text"
-) -> tuple[list[dict], DataFrame]:
-    """Train ``n_merges`` BPE merges on ``df[text_col]``.
-
-    Returns ``(merges, words)``: ``merges`` is the ordered merge table
-    (step, a, b, merged, total — one bounded driver row per step), and
-    ``words`` is the vocabulary frame (word, cnt, seq) with ``seq``
-    holding each word's FINAL symbol sequence (two-space joined, padded)
-    — the segmenter state that :func:`bpe_segment_counts` and any
-    encoder join against.  Raises if the corpus runs out of mergeable
-    pairs before ``n_merges`` (pick n_merges well under capacity; the
-    SQL oracle replays a fixed-length chain)."""
-    if n_merges < 1:
-        raise ValueError("bpe_train: n_merges must be >= 1")
-    words = word_frequencies(df, text_col).withColumn(
-        "seq", F.expr(_INIT_SEQ)
-    )
-    # materialize the vocabulary once — it is the distinct-word table
-    # (bounded by Zipf, not corpus size), and every merge step would
-    # otherwise re-scan the corpus through the groupBy lineage
-    words = words.localCheckpoint(eager=True)
-    merges: list[dict] = []
-    for step in range(n_merges):
-        top = (
-            _pair_counts(words)
-            .orderBy(F.desc("total"), F.asc("a"), F.asc("b"))
-            .first()
-        )
-        if top is None:
-            raise ValueError(
-                f"bpe_train: no adjacent pairs left at step {step} — "
-                "n_merges exceeds the corpus's merge capacity"
-            )
-        a, b, merged = top.a, top.b, top.a + top.b
-        merges.append(
-            {
-                "step": step,
-                "a": a,
-                "b": b,
-                "merged": merged,
-                "total": int(top.total),
-            }
-        )
-        words = words.withColumn(
-            "seq",
-            F.expr(
-                f"replace(seq, ' {_q(a)}  {_q(b)} ', ' {_q(merged)} ')"
-            ),
-        )
-        if (step + 1) % 25 == 0:
-            # bound the replace-chain lineage: each step's pair count
-            # re-evaluates the chain, so an unbounded chain is O(steps²)
-            # and eventually trips codegen/analyzer depth limits
-            words = words.localCheckpoint(eager=True)
-    return merges, words
 
 
 def _merge_symbols(syms: list[str], a: str, b: str) -> list[str]:
@@ -159,13 +72,10 @@ def _merge_symbols(syms: list[str], a: str, b: str) -> list[str]:
 def _local_bpe_delta(
     vocab: list[tuple[str, int]], n_merges: int
 ) -> tuple[list[dict], list[list[str]]]:
-    """The standard incremental BPE trainer (Sennrich's reference
-    ``learn_bpe`` index structure): pair counts plus a pair→words inverted
-    index, updated per merge by re-counting ONLY the words whose sequence
-    contains the merged pair.  O(affected words) per step instead of a
-    full corpus pass; tie-break (count DESC, a ASC, b ASC) — identical to
-    the distributed loop's total order (pytest identity in
-    tests/test_bpe.py)."""
+    """The merge loop of :func:`bpe_train` over a driver-local
+    ``(word, cnt)`` vocabulary: O(affected words) per step instead of a
+    full vocabulary pass; tie-break (count DESC, a ASC, b ASC).  Returns
+    the merge table and each word's final symbol list."""
     seqs = [list(w) for w, _ in vocab]
     cnts = [c for _, c in vocab]
     pair_counts: dict[tuple[str, str], int] = {}
@@ -188,8 +98,6 @@ def _local_bpe_delta(
         merges.append(
             {"step": step, "a": a, "b": b, "merged": a + b, "total": total}
         )
-        from collections import Counter
-
         for idx in pair_words.get((a, b), set()).copy():
             old = seqs[idx]
             new = _merge_symbols(old, a, b)
@@ -250,48 +158,45 @@ def apply_merges(
     return words.withColumn("seq", _seq(F.col(word_col)))
 
 
-def bpe_train_fast(
+def bpe_train(
     df: DataFrame,
     n_merges: int,
     text_col: str = "text",
     max_vocab: int = 4_000_000,
 ) -> tuple[list[dict], DataFrame]:
-    """:func:`bpe_train` with the per-merge full pair-count job replaced
-    by the standard incremental algorithm — bit-identical output
-    (pytest identity), one distributed aggregate instead of ``n_merges``
-    sequential jobs.
+    """Train ``n_merges`` BPE merges on ``df[text_col]``.
 
-    Shape (the production tokenizer-trainer design — HuggingFace
-    tokenizers / SentencePiece train exactly this way): pair statistics
-    live on the DISTINCT-WORD vocabulary, which is Zipf-bounded (10⁷–10⁸
-    rows at 100 TB, not 10¹²), so ONE map-side-combined word count runs
-    distributed, the top ``max_vocab`` rows by (cnt DESC, word) are a
-    BOUNDED driver pull (the cap is the same knob as every production
-    trainer's min-frequency cutoff), and the merge loop itself is local
-    delta maintenance over that table — O(affected words) per merge,
-    turning 32k-merge production vocabs from 32k Spark jobs into one.
-    Words beyond the cap (rare at any realistic cap) never influence pair
-    statistics — same semantics as a frequency cutoff — and get their
-    final segmentation from the trained table via :func:`apply_merges`.
+    Returns ``(merges, words)``: ``merges`` is the ordered merge table
+    (step, a, b, merged, total), and ``words`` is the vocabulary frame
+    (word, cnt, seq) with ``seq`` holding each word's FINAL symbol
+    sequence (two-space joined, padded) — the segmenter state that
+    :func:`bpe_segment_counts` and any encoder join against.  Raises if
+    the corpus runs out of mergeable pairs before ``n_merges``.
+
+    Only the top ``max_vocab`` words by (cnt DESC, word) reach the driver
+    (the cap is the same knob as every production trainer's
+    min-frequency cutoff).  Words beyond the cap never influence pair
+    statistics and get their final segmentation from the trained table
+    via :func:`apply_merges`.
     """
     if n_merges < 1:
         raise ValueError("bpe_train: n_merges must be >= 1")
     wf = word_frequencies(df, text_col)
-    head = (
-        wf.orderBy(F.desc("cnt"), F.asc("word")).limit(max_vocab).collect()
-    )
+    head = wf.orderBy(F.desc("cnt"), F.asc("word")).limit(max_vocab).toArrow()
     merges, seqs = _local_bpe_delta(
-        [(r.word, int(r.cnt)) for r in head], n_merges
+        list(zip(head["word"].to_pylist(), head["cnt"].to_pylist())), n_merges
     )
-    spark = df.sparkSession
-    trained = spark.createDataFrame(
-        [
-            (r.word, int(r.cnt), " " + "  ".join(s) + " ")
-            for r, s in zip(head, seqs)
-        ],
-        "word string, cnt long, seq string",
-    )
-    if len(head) < max_vocab:
+    # Back to Spark as an Arrow table, not a row list: below
+    # spark.sql.execution.arrow.localRelationThreshold it becomes a
+    # LocalRelation whose size estimate is rows × row width, so joins
+    # against it (bpe_segment_counts) broadcast the vocabulary.  A row
+    # list becomes an RDD scan that reports Long.MaxValue bytes, and the
+    # planner then broadcasts the corpus side instead.  Above the
+    # threshold the RDD path is what a 4M-word vocabulary should get.
+    trained = df.sparkSession.createDataFrame(head.append_column(
+        "seq", pa.array([" " + "  ".join(s) + " " for s in seqs], pa.string())
+    ))
+    if head.num_rows < max_vocab:
         return merges, trained
     rest = wf.join(
         trained.select("word"), "word", "left_anti"

@@ -74,11 +74,6 @@ def panel_hits(toks: Column, lang: str) -> Column:
     return F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words])))
 
 
-def stopword_hits(col: Column, lang: str) -> Column:
-    """Number of panel stopwords for `lang` present in the text (0-5)."""
-    return panel_hits(word_tokens(col), lang)
-
-
 def quality_score(col: Column) -> Column:
     """Deterministic quality heuristic in [0,1]:
     0.4·length-band + 0.3·(1 - punct ratio) + 0.3·mean-word-length band."""

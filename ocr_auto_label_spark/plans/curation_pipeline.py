@@ -540,15 +540,12 @@ def curate_corpus(
         }
     bpe_stats = {}
     if bpe_merges > 0:
-        # the incremental trainer (r5): bit-identical to the per-merge-job
-        # loop (pytest + bench identity) at a fraction of the jobs — the
-        # job surface uses the production path
-        from ocr_auto_label_spark.operators.bpe import bpe_train_fast, bpe_vocab
+        # one distributed word count, then the incremental merge loop on
+        # the driver (pytest identity against the greedy reference)
+        from ocr_auto_label_spark.operators.bpe import bpe_train, bpe_vocab
 
         train_docs = curated.filter(F.col("split") == names[0])
-        merges, words = bpe_train_fast(
-            train_docs, bpe_merges, text_col=text_col
-        )
+        merges, words = bpe_train(train_docs, bpe_merges, text_col=text_col)
         merges_path = f"{output_dir}/bpe_merges"
         spark.createDataFrame(
             [

@@ -127,26 +127,29 @@ def test_bpe_backslash_symbols_survive_sql_escaping(spark):
     } == want_seqs
 
 
-def test_bpe_train_fast_identity_with_distributed_loop(spark):
+def test_bpe_train_identity_with_greedy_reference(spark):
     """The incremental (delta-update) trainer must be bit-identical to
-    the per-merge-job distributed loop: same merge table, same final
+    the from-scratch greedy reference: same merge table, same final
     segmentations — on a real corpus deep enough that merged symbols
     themselves merge again."""
     from ocr_auto_label_spark.datagen import transcripts_parquet
-    from ocr_auto_label_spark.operators.bpe import bpe_train_fast
 
     df = spark.read.parquet(transcripts_parquet(2_000))
-    slow_m, slow_w = bpe_train(df, 24)
-    fast_m, fast_w = bpe_train_fast(df, 24)
-    assert fast_m == slow_m
-    slow = {(r.word, r.cnt, r.seq) for r in slow_w.collect()}
-    fast = {(r.word, r.cnt, r.seq) for r in fast_w.collect()}
-    assert fast == slow
+    wc = _word_counts([r.text for r in df.select("text").collect()])
+    want_merges, want_seqs, _ = _ref_train(wc, 24)
+    merges, words = bpe_train(df, 24)
+    got = [(m["step"], m["a"], m["b"], m["merged"], m["total"]) for m in merges]
+    assert got == want_merges
+    assert any(len(m[1]) > 1 for m in want_merges)  # merges of merges
+    got_seqs = {
+        r.word: (r.cnt, r.seq.strip().split("  ")) for r in words.collect()
+    }
+    assert got_seqs == {w: (wc[w], s) for w, s in want_seqs.items()}
 
 
 def test_bpe_apply_merges_equals_global_replay(spark):
     """Per-word replay of the trained merge table (the encoder path used
-    for beyond-cap words) equals the global replace-chain result."""
+    for beyond-cap words) equals the trainer's own segmentation."""
     from ocr_auto_label_spark.operators.bpe import apply_merges
 
     df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -157,13 +160,12 @@ def test_bpe_apply_merges_equals_global_replay(spark):
     assert got == want
 
 
-def test_bpe_train_fast_capped_vocab(spark):
+def test_bpe_train_capped_vocab(spark):
     """max_vocab below the distinct-word count: pair statistics come from
     the top-cap words only (frequency-cutoff semantics), beyond-cap words
     still get a seq via the encoder, and every word appears exactly once."""
     from ocr_auto_label_spark.operators.bpe import (
         apply_merges,
-        bpe_train_fast,
         word_frequencies,
     )
 
@@ -172,7 +174,7 @@ def test_bpe_train_fast_capped_vocab(spark):
     n_words = wf.count()
     cap = 12
     assert cap < n_words
-    merges, words = bpe_train_fast(df, 4, max_vocab=cap)
+    merges, words = bpe_train(df, 4, max_vocab=cap)
     # merge table == reference trained on the capped vocabulary
     import pyspark.sql.functions as F
 

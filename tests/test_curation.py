@@ -450,7 +450,9 @@ def test_curation_with_semantic_dedup(spark, tmp_path):
 
 
 def test_curation_with_bpe_tokenizer_training(spark, tmp_path):
-    from ocr_auto_label_spark.operators.bpe import bpe_train, bpe_vocab
+    from collections import Counter
+
+    from test_bpe import _ref_train, _word_counts
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     out = str(tmp_path / "bpe")
@@ -465,17 +467,17 @@ def test_curation_with_bpe_tokenizer_training(spark, tmp_path):
     }
     assert summary["bpe_vocab_size"] == len(vocab) > 0
     assert len(merges) == 4
-    # the stage must equal training directly on the curated TRAIN split
-    # (tokenizer never sees eval text)
+    # the stage must equal the greedy reference trained on the curated
+    # TRAIN split alone (tokenizer never sees eval text)
     train = spark.read.parquet(f"{out}/curated").filter("split = 'train'")
-    want_merges, want_words = bpe_train(train, 4)
-    assert merges == sorted(
-        (m["step"], m["a"], m["b"], m["merged"], m["total"])
-        for m in want_merges
-    )
-    assert vocab == {
-        r.symbol: r.total for r in bpe_vocab(want_words).collect()
-    }
+    wc = _word_counts([r.text for r in train.select("text").collect()])
+    want_merges, want_seqs, _ = _ref_train(wc, 4)
+    assert merges == want_merges
+    want_vocab = Counter()
+    for w, syms in want_seqs.items():
+        for sym in syms:
+            want_vocab[sym] += wc[w]
+    assert vocab == dict(want_vocab)
 
 
 def test_curation_with_quality_model_selection(spark, tmp_path):

@@ -6,6 +6,7 @@ order-insensitive values."""
 from __future__ import annotations
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -13,14 +14,19 @@ import pytest
 import __spark_entry__ as entry_mod
 from ocr_auto_label_spark.entry_queries import REGISTRY, TABLES
 
-import os
-
 SF_DIR = os.environ.get("ENTRY_TEST_SF_DIR", "/root/testdata/sf0.001")
-# sf-dependent oracle GENERATORS (extract_flagship's twin corpus, the ANN
-# replay's probe/codebook literals) read this env var with a driver-scale
-# sf0.01 default — pin it to the directory this test run actually uses so
-# both sides always see the same input
-os.environ["ENTRY_TEST_SF_DIR"] = SF_DIR
+
+
+@pytest.fixture(scope="module", autouse=True)
+def _pin_oracle_sf_dir():
+    """sf-dependent oracle GENERATORS (extract_flagship's twin corpus, the
+    ANN replay's probe/codebook literals) read ENTRY_TEST_SF_DIR with an
+    sf0.01 default — pin it to the directory this module
+    actually uses so both sides see the same input, and restore it after
+    the module so other test modules never inherit it."""
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("ENTRY_TEST_SF_DIR", SF_DIR)
+        yield
 
 
 @pytest.fixture(scope="module")
@@ -55,7 +61,10 @@ def _normalize(rows, cols):
     return sorted(normed, key=lambda t: tuple((v is None, str(v)) for v in t))
 
 
-ORACLE_NAMES = sorted(entry_mod.oracle_sql().keys())
+# the entries build_oracle_sql() covers, read off the registry: collection
+# runs before the fixture pins the sf directory, and building the oracles
+# here would run their generators at the sf0.01 default
+ORACLE_NAMES = sorted(n for n, (_, oracle) in REGISTRY.items() if oracle is not None)
 
 # The driver's value-hash canonicalization is rendering-sensitive: DuckDB
 # HUGEINT round-trips through pandas as float64 ("425.0" vs Spark BIGINT's
