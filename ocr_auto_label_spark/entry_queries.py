@@ -1333,7 +1333,7 @@ def _f1_f5_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_estimate,
         hll_registers,
     )
-    from ocr_auto_label_spark.operators.textstats import word_tokens
+    from ocr_auto_label_spark.operators.textstats import word_terms
 
     from ocr_auto_label_spark.operators.util import ensure_parallelism
 
@@ -1411,11 +1411,7 @@ def _f1_f5_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_terms = list(_CMS_PROBE_TERMS)
     truec = (
         docs.select(
-            F.explode(
-                F.filter(
-                    word_tokens(F.col("text")), lambda w: w != F.lit("")
-                )
-            ).alias("term")
+            F.explode(word_terms(F.col("text"))).alias("term")
         )
         .filter(F.col("term").isin(probe_terms))
         .groupBy("term")

@@ -36,14 +36,13 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from ocr_auto_label_spark.operators.textstats import word_tokens
+from ocr_auto_label_spark.operators.textstats import word_terms
 
 
 def word_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, cnt) over the corpus — the weighted training vocabulary."""
-    toks = F.filter(word_tokens(F.col(text_col)), lambda w: w != F.lit(""))
     return (
-        df.select(F.explode(toks).alias("word"))
+        df.select(F.explode(word_terms(F.col(text_col))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -227,12 +226,14 @@ def bpe_segment_counts(
     one word-keyed equi-join against the vocabulary's per-word symbol
     count (AQE broadcast-or-shuffle; every corpus word is in the
     vocabulary by construction)."""
-    toks = F.filter(word_tokens(F.col(text_col)), lambda w: w != F.lit(""))
     per_word = words.select(
         "word", F.size(F.expr(_SYMS)).alias("n_sym")
     )
     return (
-        df.select(F.col(id_col).alias("id"), F.explode(toks).alias("word"))
+        df.select(
+            F.col(id_col).alias("id"),
+            F.explode(word_terms(F.col(text_col))).alias("word"),
+        )
         .join(per_word, "word")
         .groupBy("id")
         .agg(

@@ -19,6 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ocr_auto_label_spark.operators.textstats import (
+    all_word_ngrams, cased_tokens, let, word_tokens,
+)
 from ocr_auto_label_spark.operators.util import ensure_parallelism
 
 
@@ -37,10 +40,12 @@ def word_shingles(col_name: str, width: int = 3) -> Column:
     fewer shingles per document (one per token instead of one per char),
     so the minhash explode+agg touches ~6× fewer rows at equal recall for
     document-scale near-dup detection."""
-    toks = f"split(lower(trim({col_name})), '\\\\s+')"
-    return F.expr(
-        f"array_distinct(transform(sequence(1, greatest(size({toks}) - {width - 1}, 1)), "
-        f"i -> array_join(slice({toks}, i, {width}), ' ')))"
+    return let(
+        word_tokens(F.col(col_name)),
+        # a document shorter than ``width`` is ONE shingle: all its words
+        lambda t: F.when(
+            F.size(t) >= width, F.array_distinct(all_word_ngrams(t, width))
+        ).otherwise(F.array(F.array_join(t, " "))),
     )
 
 
@@ -284,13 +289,21 @@ def simhash64(col_name: str) -> Column:
 
     For each bit position, sum ±1 votes from each token's xxhash64 bit;
     bit set iff the vote is positive.  aggregate() keeps it one pass."""
-    tokens = f"split(lower(trim({col_name})), '\\\\s+')"
-    # for each bit j: majority vote over tokens of that bit of xxhash64(token)
-    return F.expr(
-        "aggregate(sequence(0, 63), cast(0 as bigint), (acc, j) -> acc + shiftleft("
-        f" cast(aggregate({tokens}, 0, (v, t) ->"
-        "   v + if(((xxhash64(t) >> j) & 1) = 1, 1, -1)) > 0 as bigint), j))"
-    )
+
+    def fingerprint(toks: Column) -> Column:
+        def vote(j: Column) -> Column:
+            # majority vote over tokens of bit j of xxhash64(token)
+            return F.aggregate(toks, F.lit(0), lambda v, t: v + F.when(
+                F.call_function("shiftright", F.xxhash64(t), j).bitwiseAND(1) == 1, 1
+            ).otherwise(-1))
+
+        return F.aggregate(
+            F.sequence(F.lit(0), F.lit(63)), F.lit(0).cast("bigint"),
+            lambda acc, j: acc
+            + F.call_function("shiftleft", (vote(j) > 0).cast("bigint"), j),
+        )
+
+    return let(word_tokens(F.col(col_name)), fingerprint)
 
 
 def simhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -421,42 +434,23 @@ def remove_duplicated_spans(
     if width <= 0:
         raise ValueError("remove_duplicated_spans: width must be positive")
     keys = list(key_cols)
-    # strip ALL whitespace classes (regexp ≡ str.strip(); F.trim is
-    # spaces-only and leaves phantom '' tokens on trailing newlines)
-    stripped = F.regexp_replace(F.col(text_col), r"^\s+|\s+$", "")
-    toks = F.when(
-        F.col(text_col).isNull() | (stripped == ""),
-        F.array().cast("array<string>"),
-    ).otherwise(F.split(stripped, r"\s+"))
+    toks = cased_tokens(F.col(text_col))
     base = df.select(
         *keys, toks.alias("__toks"), F.size(toks).alias("n_tokens")
     )
     tok = base.select(
         *keys, F.posexplode(F.col("__toks")).alias("pos", "token")
     )
-    span_structs = F.when(
-        F.col("n_tokens") >= width,
-        F.transform(
-            F.sequence(F.lit(0), F.col("n_tokens") - width),
-            lambda i: F.struct(
-                i.alias("p"),
-                F.array_join(
-                    F.slice(F.col("__toks"), i + 1, F.lit(width)), " "
-                ).alias("span"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<p:int,span:string>>"))
     okey = F.concat_ws(
         "/",
         *[F.lpad(F.col(c).cast("string"), 12, "0") if c != keys[0]
           else F.col(c).cast("string") for c in keys],
         F.lpad(F.col("p").cast("string"), 12, "0"),
     )
-    occ = (
-        base.select(*keys, F.explode(span_structs).alias("s"))
-        .select(*keys, F.col("s.p").alias("p"), F.col("s.span").alias("span"))
-        .withColumn("okey", okey)
-    )
+    occ = base.select(
+        *keys,
+        F.posexplode(all_word_ngrams(F.col("__toks"), width)).alias("p", "span"),
+    ).withColumn("okey", okey)
     stats = occ.groupBy("span").agg(
         F.count(F.lit(1)).alias("cnt"), F.min("okey").alias("canon")
     )

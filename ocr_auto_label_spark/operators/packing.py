@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ocr_auto_label_spark.operators.sampling import checked_id_hash
-from ocr_auto_label_spark.operators.textstats import token_count
+from ocr_auto_label_spark.operators.textstats import cased_tokens, token_count
 
 
 def chunk_documents(
@@ -68,15 +68,7 @@ def chunk_documents(
         raise ValueError("chunk_documents: need 0 <= overlap < budget")
     stride = budget - overlap
     carry = list(carry_cols or [])
-    # strip ALL whitespace classes, not F.trim (spaces only): a trailing
-    # newline would otherwise leave a phantom '' token, inflating
-    # n_tokens past the budget and emitting a spurious empty chunk
-    # (regex strip ≡ str.strip() — the flagship normalizer equivalence)
-    stripped = F.regexp_replace(F.col(text_col), r"^\s+|\s+$", "")
-    toks = F.when(
-        F.col(text_col).isNull() | (stripped == ""),
-        F.array().cast("array<string>"),
-    ).otherwise(F.split(stripped, r"\s+"))
+    toks = cased_tokens(F.col(text_col))  # no phantom '' → no empty chunk
     base = df.select(F.col(id_col), *carry, toks.alias("__toks")).select(
         id_col,
         *carry,

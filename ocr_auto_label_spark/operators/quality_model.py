@@ -43,13 +43,12 @@ def doc_features(
 ) -> DataFrame:
     """(id, y, bucket, x): L1-normalized hashed unigram features plus
     the 0/1 label.  Docs with no tokens drop out (no features)."""
-    from ocr_auto_label_spark.operators.textstats import word_tokens
+    from ocr_auto_label_spark.operators.textstats import word_terms
 
-    toks = F.filter(word_tokens(F.col(text_col)), lambda w: w != F.lit(""))
     words = df.select(
         F.col(id_col).alias("id"),
         F.when(label_expr, F.lit(1.0)).otherwise(F.lit(0.0)).alias("y"),
-        F.explode(toks).alias("word"),
+        F.explode(word_terms(F.col(text_col))).alias("word"),
     )
     per_bucket = (
         words.withColumn(

@@ -27,6 +27,8 @@ from fractions import Fraction
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from ocr_auto_label_spark.operators.textstats import all_word_ngrams, word_tokens
+
 
 def checked_id_hash(id_col: Column) -> Column:
     """Signed xxhash64 (seed 42) of a NON-NULL long id.  NULL ids must
@@ -169,14 +171,14 @@ def temperature_resample(
     ``n^α`` shares and the integerization run in ONE place (the driver —
     never per-executor, so libm/accumulation differences cannot split the
     cluster's view of the targets), largest-remainder rounding makes the
-    targets sum EXACTLY to ``min(total, feasible)`` with a
-    lexicographic tie-break, and WHICH rows survive is the
+    targets sum EXACTLY to ``min(total, feasible)`` with a tie-break on
+    the keys as strings, and WHICH rows survive is the
     ``(xxhash64(id), id)`` rank — stable across runs, partitionings, and
     cluster sizes.  Scale shape: one bounded pull + one window shuffle
     keyed by group; the target map folds into the filter as a literal
     CASE (no second join).
 
-    Adds ``mix_rank``; returns only surviving rows.
+    NULL groups raise.  Adds ``mix_rank``; returns only surviving rows.
     """
     if not 0 < alpha <= 1:
         raise ValueError("temperature_resample: alpha must be in (0, 1]")
@@ -185,6 +187,9 @@ def temperature_resample(
     counts = {r[0]: int(r[1]) for r in df.groupBy(group_col).count().collect()}
     if not counts:
         raise ValueError("temperature_resample: empty input")
+    if None in counts:  # a NULL group matches no target: rows would vanish
+        n_null = counts[None]
+        raise ValueError(f"temperature_resample: {n_null} rows have a NULL {group_col}")
     shares = {g: float(n) ** alpha for g, n in counts.items()}
     remaining = float(sum(shares.values()))
     left = total
@@ -199,7 +204,7 @@ def temperature_resample(
                 for g in open_groups}
         rem = sorted(
             open_groups,
-            key=lambda g: (-(quota[g] - int(quota[g])), g),
+            key=lambda g: (-(quota[g] - int(quota[g])), str(g)),
         )
         alloc = dict(base)
         short = left - sum(base.values())
@@ -227,7 +232,7 @@ def temperature_resample(
         checked_id_hash(F.col(id_col)), id_col
     )
     keep_expr: Column = F.lit(0).cast("long")
-    for g in sorted(targets, reverse=True):
+    for g in sorted(targets, key=str, reverse=True):
         keep_expr = F.when(
             F.col(group_col) == g, F.lit(targets[g])
         ).otherwise(keep_expr)
@@ -235,18 +240,6 @@ def temperature_resample(
         df.withColumn("mix_rank", F.row_number().over(w))
         .filter(F.col("mix_rank") <= keep_expr)
     )
-
-
-def word_ngrams(text_col: Column, n: int) -> Column:
-    """Distinct lowercase word-``n``-gram array from a text column
-    (whitespace tokens, space-joined grams; ``n`` validated positive —
-    n=0 would emit a '' gram for every doc and poison the contamination
-    join).  The gram construction (including the sequence(1,0)-descends
-    guard) is the shared ``textstats.all_word_ngrams``."""
-    from ocr_auto_label_spark.operators.textstats import all_word_ngrams
-
-    toks = F.split(F.lower(F.trim(text_col)), r"\s+")
-    return F.array_distinct(all_word_ngrams(toks, n))
 
 
 def cross_split_contamination(
@@ -275,7 +268,9 @@ def cross_split_contamination(
     grams = df.select(
         F.col(id_col).alias("id"),
         F.col(split_col).alias("sp"),
-        F.explode(word_ngrams(F.col(text_col), n)).alias("gram"),
+        F.explode(
+            F.array_distinct(all_word_ngrams(word_tokens(F.col(text_col)), n))
+        ).alias("gram"),
     )
     train_grams = grams.filter(F.col("sp") == train_name).select("gram").distinct()
     eval_grams = grams.filter(F.col("sp") != train_name)

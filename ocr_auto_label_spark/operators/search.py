@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ocr_auto_label_spark.operators.textstats import word_tokens
+from ocr_auto_label_spark.operators.textstats import word_terms
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -50,11 +50,9 @@ def build_inverted_index(
     reach the posting aggregate (the pairs→surviving-terms equi-join is
     AQE-planned).  ``None`` skips the extra pass — fine for bounded
     corpora and tests."""
-    toks = F.filter(word_tokens(F.col(text_col)), lambda w: w != F.lit(""))
-    pairs = (
-        df.select(F.col(id_col).alias("id"), F.explode(toks).alias("term"))
-        .distinct()
-    )
+    pairs = df.select(
+        F.col(id_col).alias("id"), F.explode(word_terms(F.col(text_col))).alias("term")
+    ).distinct()
     if max_df is not None:
         if max_df <= 0:
             raise ValueError("build_inverted_index: max_df must be positive")
@@ -116,10 +114,20 @@ def write_search_index(
 
     ``max_df`` is the same build-time stopword cutoff as
     :func:`build_inverted_index` — at corpus scale a stopword's posting
-    list must never reach an aggregation buffer."""
-    toks = F.filter(word_tokens(F.col(text_col)), lambda w: w != F.lit(""))
+    list must never reach an aggregation buffer.
+
+    ``{path}/meta`` holds the bucket count, so readers never probe with
+    a mismatched modulus (which silently drops ~half the query terms).
+    It is also the commit marker: NULL while the tables are rewritten,
+    so a write that fails part-way leaves an index readers reject."""
+
+    def write_meta(n: int | None) -> None:
+        meta = df.sparkSession.createDataFrame([(n,)], "n_buckets int")
+        meta.write.mode("overwrite").parquet(f"{path}/meta")
+
+    write_meta(None)
     tok_rows = df.select(
-        F.col(id_col).alias("id"), F.explode(toks).alias("term")
+        F.col(id_col).alias("id"), F.explode(word_terms(F.col(text_col))).alias("term")
     )
     tf = tok_rows.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     if max_df is not None:
@@ -150,17 +158,15 @@ def write_search_index(
     )
     dl = tok_rows.groupBy("id").agg(F.count(F.lit(1)).alias("dl"))
     dl.write.mode("overwrite").parquet(f"{path}/doclens")
-    # the bucket count is part of the index layout: persist it so readers
-    # can never probe with a mismatched modulus (a wrong n_buckets makes
-    # ~half the query terms silently vanish behind the partition filter)
-    df.sparkSession.createDataFrame(
-        [(int(n_buckets),)], "n_buckets int"
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    write_meta(int(n_buckets))
 
 
 def index_n_buckets(spark, path: str) -> int:
     """The bucket count a materialized index was written with."""
-    return int(spark.read.parquet(f"{path}/meta").collect()[0].n_buckets)
+    n = spark.read.parquet(f"{path}/meta").collect()[0].n_buckets
+    if n is None:
+        raise ValueError(f"index at {path} is incomplete: a write did not finish")
+    return int(n)
 
 
 def term_buckets(spark, terms: list[str], n_buckets: int) -> list[int]:
@@ -258,7 +264,7 @@ def boolean_search(index: DataFrame, must_terms: list[str]) -> DataFrame:
     posting intersection: explode only the query terms' postings, count
     hits per doc, keep counts == len(must_terms).  Returns (id).
 
-    Terms are lowercased to match the index's ``word_tokens``
+    Terms are lowercased to match the index's ``word_terms``
     normalization (an un-normalized 'Spark' would otherwise silently
     match nothing); terms that collapse after lowercasing are rejected
     like any other duplicate."""
@@ -312,9 +318,8 @@ def bm25_search(
         raise ValueError("bm25_search: query_terms must be non-empty")
     if len(set(terms)) != len(terms):
         raise ValueError("bm25_search: query_terms must be distinct")
-    toks = F.filter(word_tokens(F.col(text_col)), lambda w: w != F.lit(""))
     tok_rows = df.select(
-        F.col(id_col).alias("id"), F.explode(toks).alias("term")
+        F.col(id_col).alias("id"), F.explode(word_terms(F.col(text_col))).alias("term")
     )
     dl = tok_rows.groupBy("id").agg(F.count(F.lit(1)).alias("dl"))
     tf = (
@@ -395,16 +400,14 @@ def phrase_search(
     offset (pos - i), then the words are intersected with equi-joins on
     (id, start) — work is O(Σ postings of the phrase's words), never a
     text rescan, and each join key (id, start) is near-unique so the
-    joins stay skew-free even for common words.  Positions are indices
-    into the EMPTY-FILTERED token sequence (matching word_tokens
-    normalization), 0-based."""
+    joins stay skew-free even for common words.  Positions are 0-based
+    indices into the ``word_terms`` sequence."""
     terms = [t.lower() for t in phrase]
     if len(terms) < 2:
         raise ValueError("phrase_search: phrase needs >= 2 words")
-    toks = F.filter(word_tokens(F.col(text_col)), lambda w: w != F.lit(""))
     pos_rows = df.select(
         F.col(id_col).alias("id"),
-        F.posexplode(toks).alias("pos", "term"),
+        F.posexplode(word_terms(F.col(text_col))).alias("pos", "term"),
     )
     starts = None
     for i, t in enumerate(terms):

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ocr_auto_label_spark.operators.textstats import word_tokens
+from ocr_auto_label_spark.operators.textstats import word_terms
 
 CMS_DEPTH = 4
 CMS_WIDTH = 1024
@@ -56,8 +56,7 @@ def cms_build(
     the corpus size.  Absent cells mean count 0."""
     if depth < 1 or width < 1:
         raise ValueError("cms_build: depth and width must be >= 1")
-    toks = F.filter(word_tokens(F.col(text_col)), lambda w: w != F.lit(""))
-    cells = df.select(F.explode(toks).alias("term")).select(
+    cells = df.select(F.explode(word_terms(F.col(text_col))).alias("term")).select(
         F.explode(
             F.array(
                 *[
@@ -165,9 +164,8 @@ def hll_registers(
         raise ValueError("hll_registers: p must be in [4, 16]")
     k = 64 - p
     mask = (1 << k) - 1
-    toks = F.filter(word_tokens(F.col(text_col)), lambda w: w != F.lit(""))
     rows = (
-        df.select(F.explode(toks).alias("term"))
+        df.select(F.explode(word_terms(F.col(text_col))).alias("term"))
         .select(F.xxhash64("term").alias("h"))
         .select(
             F.shiftrightunsigned(F.col("h"), k).cast("int").alias("bucket"),
@@ -258,9 +256,8 @@ def bloom_build(
     candidates that hit."""
     if k < 1 or m < 1:
         raise ValueError("bloom_build: k and m must be >= 1")
-    toks = F.filter(word_tokens(F.col(text_col)), lambda w: w != F.lit(""))
     return (
-        df.select(F.explode(toks).alias("term"))
+        df.select(F.explode(word_terms(F.col(text_col))).alias("term"))
         .select(
             F.explode(
                 F.array(

@@ -4,9 +4,21 @@ All pure column expressions (whole-stage codegen, no Python) so they run
 JVM-side at 100TB scan speed: token counting, quality scoring, n-gram
 language ID, document fingerprinting.  Formulas are deliberately simple
 and closed-form so a DuckDB oracle can replicate them exactly.
+
+Text becomes tokens through one of three tokenizers, and word n-grams
+come from one builder, all defined here:
+
+- ``word_tokens``: lowercased, space-trimmed, whitespace-split; keeps
+  ``''`` tokens (which the lang-id, repetition and span oracles count);
+- ``word_terms``: ``word_tokens`` without the ``''`` tokens;
+- ``cased_tokens``: case kept, every whitespace class stripped, ``[]``
+  for NULL or blank text;
+- ``all_word_ngrams``: the n-grams of a token array, in linear time.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -31,21 +43,41 @@ def word_tokens(col: Column) -> Column:
     return F.split(F.lower(F.trim(col)), r"\s+")
 
 
+def word_terms(col: Column) -> Column:
+    return F.filter(word_tokens(col), lambda w: w != F.lit(""))
+
+
+def cased_tokens(col: Column) -> Column:
+    # regexp strip ≡ str.strip(): F.trim is spaces-only and would leave
+    # a phantom '' token on a trailing newline
+    stripped = F.regexp_replace(col, r"^\s+|\s+$", "")
+    return F.when(
+        col.isNull() | (stripped == ""), F.array().cast("array<string>")
+    ).otherwise(F.split(stripped, r"\s+"))
+
+
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once.  A lambda body that
+    reads an expression re-evaluates it on every call (an n-gram
+    ``transform`` over a tokenizer re-splits the text per gram, O(n²));
+    as the one element of an array it is bound to a lambda variable."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def all_word_ngrams(toks: Column, n: int) -> Column:
-    """All ``n``-gram strings (space-joined, WITH repeats) from a token
-    array.  Guarded so arrays shorter than ``n`` yield an empty array —
-    and the guard matters: Spark's ``sequence(1, 0)`` DESCENDS instead of
-    being empty.  Single definition shared by the span-duplication
-    signal and ``sampling.word_ngrams`` (which adds array_distinct)."""
+    """All ``n``-gram strings (space-joined, WITH repeats, element ``i``
+    starting at token ``i``) of a token array; empty when it is shorter
+    than ``n`` or NULL — a guard, since Spark's ``sequence(1, 0)``
+    DESCENDS.  ``toks`` is evaluated once (``let``)."""
     if n <= 0:
         raise ValueError("all_word_ngrams: n must be positive")
-    return F.when(
-        F.size(toks) >= n,
+    return let(toks, lambda t: F.when(
+        F.size(t) >= n,
         F.transform(
-            F.sequence(F.lit(1), F.size(toks) - n + 1),
-            lambda i: F.array_join(F.slice(toks, i, F.lit(n)), " "),
+            F.sequence(F.lit(1), F.size(t) - n + 1),
+            lambda i: F.array_join(F.slice(t, i, F.lit(n)), " "),
         ),
-    ).otherwise(F.array().cast("array<string>"))
+    ).otherwise(F.array().cast("array<string>")))
 
 
 def dup_word_frac(toks: Column) -> Column:
@@ -161,16 +193,7 @@ def repetition_stats(
         dup_word_frac(F.col("toks")).alias("dup_word_frac"),
         "toks",
     )
-    grams = base.select(
-        "id",
-        # sequence(1, 0) DESCENDS in Spark, so the <2-token case needs the
-        # filter guard (the confusion_sql idiom), not greatest(·, 0)
-        F.explode(F.expr(
-            "transform(filter(sequence(1, greatest(size(toks) - 1, 1)), "
-            "i -> i <= size(toks) - 1), "
-            "i -> concat(element_at(toks, i), ' ', element_at(toks, i + 1)))"
-        )).alias("gram"),
-    )
+    grams = base.select("id", F.explode(all_word_ngrams(F.col("toks"), 2)).alias("gram"))
     per_gram = grams.groupBy("id", "gram").agg(F.count(F.lit(1)).alias("cnt"))
     per_doc = per_gram.groupBy("id").agg(
         F.max("cnt").alias("top_cnt"), F.sum("cnt").alias("bigram_cnt")
@@ -211,12 +234,8 @@ def duplicated_span_stats(
     Output: (id, n_spans, dup_spans, dup_span_frac) — one row per doc,
     zeros for docs shorter than ``span_tokens``.
     """
-    spans = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            all_word_ngrams(word_tokens(F.col(text_col)), span_tokens)
-        ).alias("span"),
-    )
+    grams = all_word_ngrams(word_tokens(F.col(text_col)), span_tokens)
+    spans = df.select(F.col(id_col).alias("id"), F.explode(grams).alias("span"))
     per = spans.groupBy("id", "span").agg(F.count(F.lit(1)).alias("c"))
     tot = F.sum("c").over(Window.partitionBy("span"))
     doc = (
@@ -333,11 +352,10 @@ def dsir_logweights(
         # power of two ⇒ pmod of the signed hash == unsigned remainder,
         # which is what the DuckDB XXH64-SQL oracle replays
         raise ValueError("dsir_logweights: n_buckets must be a power of two")
-    toks = F.filter(word_tokens(F.col(text_col)), lambda w: w != F.lit(""))
     grams = df.select(
         F.col(id_col).alias("id"),
         target.alias("is_tgt"),
-        F.explode(all_word_ngrams(toks, 2)).alias("gram"),
+        F.explode(all_word_ngrams(word_terms(F.col(text_col)), 2)).alias("gram"),
     )
     occ = (
         grams.select(
@@ -402,8 +420,8 @@ def unigram_nll(
     """
     toks = df.select(
         F.col(id_col).alias("id"),
-        F.explode(word_tokens(F.col(text_col))).alias("word"),
-    ).filter(F.col("word") != "")
+        F.explode(word_terms(F.col(text_col))).alias("word"),
+    )
     vocab = toks.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
     totals = vocab.agg(
         F.sum("cnt").alias("n_tokens"), F.count(F.lit(1)).alias("v_size")
@@ -453,9 +471,9 @@ def tfidf_top_terms(
     """
     if k <= 0:
         raise ValueError("tfidf_top_terms: k must be positive")
-    toks = F.filter(word_tokens(F.col(text_col)), lambda w: w != F.lit(""))
     words = df.select(
-        F.col(id_col).alias("id"), F.explode(toks).alias("term")
+        F.col(id_col).alias("id"),
+        F.explode(word_terms(F.col(text_col))).alias("term"),
     )
     tf = words.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_cnt"))
@@ -522,11 +540,10 @@ def stupid_backoff_scores(
     first (the DSIR layout) if the raw gram vocabulary outgrows the
     join.
     """
-    toks = F.filter(word_tokens(F.col(text_col)), lambda w: w != F.lit(""))
     base = df.select(
         F.col(id_col).alias("id"),
         model_predicate.alias("is_model"),
-        toks.alias("t"),
+        word_terms(F.col(text_col)).alias("t"),
     ).filter(F.size("t") > 0)
     positions = base.select(
         "id",

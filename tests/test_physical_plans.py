@@ -402,3 +402,108 @@ def test_sketch_builds_are_single_pass_single_shuffle(spark):
         assert plan.count("Exchange hashpartitioning") == 1, build.__name__
         assert "BatchEvalPython" not in plan, build.__name__
         assert "Join" not in plan, build.__name__
+
+
+_TOKENIZER_NODES = {
+    "StringSplit", "Lower", "StringTrim", "RegExpReplace", "ArrayFilter",
+}
+
+
+def _scala_list(seq) -> list:
+    return [seq.apply(i) for i in range(seq.size())]
+
+
+def _per_call_tokenizers(df) -> list[str]:
+    """Tokenizer nodes inside a lambda body that read a column of the
+    row rather than a lambda variable: Spark evaluates those once per
+    lambda call, so an n-gram transform re-splits the document per gram."""
+    found: list[str] = []
+
+    def reads_row(e) -> bool:
+        return e.getClass().getSimpleName() == "AttributeReference" or any(
+            reads_row(c) for c in _scala_list(e.children())
+        )
+
+    def walk(e, in_lambda: bool) -> None:
+        name = e.getClass().getSimpleName()
+        if in_lambda and name in _TOKENIZER_NODES and reads_row(e):
+            found.append(e.toString())
+            return
+        if name == "LambdaFunction":
+            walk(e.function(), True)
+            return
+        for c in _scala_list(e.children()):
+            walk(c, in_lambda)
+
+    def walk_plan(p) -> None:
+        for e in _scala_list(p.expressions()):
+            walk(e, False)
+        for c in _scala_list(p.children()):
+            walk_plan(c)
+
+    walk_plan(df._jdf.queryExecution().optimizedPlan())
+    return found
+
+
+def _decontamination_report(spark, docs, tmp_path, monkeypatch):
+    """The decontamination frame ``curate_corpus`` builds (and writes)."""
+    from ocr_auto_label_spark.plans import curation_pipeline
+
+    reports = []
+    real = curation_pipeline.cross_split_contamination
+
+    def capture(*args, **kwargs):
+        reports.append(real(*args, **kwargs))
+        return reports[-1]
+
+    monkeypatch.setattr(curation_pipeline, "cross_split_contamination", capture)
+    curation_pipeline.curate_corpus(
+        spark, docs, str(tmp_path / "cur"), min_tokens=20,
+        max_dup_word_frac=0.65,
+    )
+    return reports[0]
+
+
+@pytest.mark.parametrize("op", [
+    "cross_split_contamination", "duplicated_span_stats", "dsir_logweights",
+    "repetition_stats", "remove_duplicated_spans", "minhash_word_shingles",
+    "simhash_dedup", "curate_corpus_decontamination",
+])
+def test_tokenizers_run_once_per_row_not_per_lambda_call(
+    spark, tmp_path, monkeypatch, op
+):
+    """Every n-gram, shingle and fingerprint builder tokenizes a row ONCE:
+    no lambda body in the optimized plan re-evaluates a tokenizer over a
+    row column (which made n-gram building quadratic in document length)."""
+    from ocr_auto_label_spark.operators.dedup import (
+        minhash_signatures,
+        remove_duplicated_spans,
+        simhash_dedup,
+        word_shingles,
+    )
+    from ocr_auto_label_spark.operators.sampling import cross_split_contamination
+    from ocr_auto_label_spark.operators.textstats import (
+        dsir_logweights,
+        duplicated_span_stats,
+        repetition_stats,
+    )
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    df = docs.withColumn(
+        "split", F.when(F.col("doc_id") % 2 == 0, "train").otherwise("test")
+    ).withColumn("conv_id", F.col("source")).withColumn("turn_idx", F.col("doc_id"))
+    build = {
+        "cross_split_contamination": lambda: cross_split_contamination(df),
+        "duplicated_span_stats": lambda: duplicated_span_stats(df),
+        "dsir_logweights": lambda: dsir_logweights(df, F.col("lang") == "en"),
+        "repetition_stats": lambda: repetition_stats(df),
+        "remove_duplicated_spans": lambda: remove_duplicated_spans(df, width=13),
+        "minhash_word_shingles": lambda: minhash_signatures(
+            df, shingle_fn=word_shingles
+        ),
+        "simhash_dedup": lambda: simhash_dedup(df),
+        "curate_corpus_decontamination": lambda: _decontamination_report(
+            spark, docs, tmp_path, monkeypatch
+        ),
+    }[op]
+    assert _per_call_tokenizers(build()) == []

@@ -288,3 +288,17 @@ def test_temperature_resample_validates(spark):
         temperature_resample(df, "grp", 1.5, 100)
     with pytest.raises(ValueError):
         temperature_resample(df, "grp", 0.5, 0)
+    # a NULL group matches no target: it must raise, not silently vanish
+    with_null = df.unionByName(
+        spark.createDataFrame([(700, None), (701, None)], "doc_id long, grp string")
+    )
+    with pytest.raises(ValueError, match="2 rows have a NULL grp"):
+        temperature_resample(with_null, "grp", 0.5, 100)
+    # keys tie-break as strings: 9 and 10 tie on the remainder, and the
+    # extra row goes to "10" < "9"
+    ints = spark.createDataFrame(
+        [(i, 9 if i < 5 else 10) for i in range(10)], "doc_id long, grp long"
+    )
+    per = {r[0]: r[1] for r in temperature_resample(ints, "grp", 1.0, 5)
+           .groupBy("grp").count().collect()}
+    assert per == {9: 2, 10: 3}

@@ -225,6 +225,53 @@ def test_materialized_index_identity_and_bm25(spark, tmp_path):
     assert got_bm == want_bm
 
 
+@pytest.mark.parametrize("failing", ["terms", "doclens", "meta"])
+def test_failed_index_rewrite_never_answers_with_a_stale_modulus(
+    spark, tmp_path, monkeypatch, failing
+):
+    """Rewriting an index with a new bucket count and failing part-way
+    (at the terms, doclens or final meta write) leaves an index that
+    still answers as the old one did, or raises — never new terms probed
+    with the old modulus (which silently drops query terms)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from ocr_auto_label_spark.operators.search import (
+        bm25_search_indexed,
+        write_search_index,
+    )
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    path = str(tmp_path / "search_index")
+    terms = ["merge", "spark", "window", "the", "data"]
+    write_search_index(docs, path, n_buckets=8)
+    want = {(r.id, r.dl, r.score)
+            for r in bm25_search_indexed(spark, path, terms, top_k=25).collect()}
+    assert want
+
+    written = []
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, target, *args, **kwargs):
+        table = target.rsplit("/", 1)[-1]
+        # "meta" fails the write that commits the index, after the terms
+        if table == failing and (failing != "meta" or "terms" in written):
+            raise OSError(f"injected failure writing {table}")
+        written.append(table)
+        return real_parquet(self, target, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(OSError, match="injected"):
+        write_search_index(docs, path, n_buckets=5)
+    monkeypatch.undo()
+    try:
+        got = {(r.id, r.dl, r.score)
+               for r in bm25_search_indexed(spark, path, terms, top_k=25).collect()}
+    except ValueError as e:
+        assert "incomplete" in str(e)
+    else:
+        assert got == want
+
+
 def test_search_index_probe_is_partition_pruned(spark, tmp_path):
     """A materialized-index query reads ONLY its terms' buckets: the scan's
     partition filters carry term_bucket (mirror of the IVF index test) —
