@@ -45,8 +45,8 @@ def levenshtein(a: str, b: str, cap: int | None = None) -> int:
 def _within_one_edit(a: str, b: str) -> bool:
     """Exact O(n) test for levenshtein(a, b) == 1 given a != b.
 
-    The DP above is ~100× slower for the common cap=1 case (the fuzzy
-    join's max_distance), which profiling shows dominates extraction time.
+    The DP above is ~100× slower, and ``canonical_match``'s one-edit
+    check is on the extraction hot path.
     """
     la, lb = len(a), len(b)
     if la == lb:  # exactly one substitution
@@ -100,46 +100,37 @@ def _bucket_deletion_index(prefix: str, arity: int) -> dict[str, tuple[str, ...]
 
 
 @lru_cache(maxsize=1 << 16)
-def canonical_match(label: str, max_distance: int = 1) -> tuple[str | None, float]:
+def canonical_match(label: str) -> tuple[str | None, float]:
     """(matched canonical label, similarity in [0,1]).
 
-    Exact member → (label, 1.0).  Otherwise nearest canonical within
-    ``max_distance`` edits inside the blocking bucket, scored by trigram
-    Jaccard; ties broken by (distance asc, trigram sim desc, label asc)
-    for full determinism.  No match → (None, 0.0).
+    Exact member → (label, 1.0).  Otherwise the nearest canonical within
+    one edit inside the blocking bucket, scored by trigram Jaccard; ties
+    broken by (trigram sim desc, label asc) for full determinism.  No
+    match → (None, 0.0).
 
-    Pure function of its arguments → safe to memoize; real corpora repeat
+    Pure function of its argument → safe to memoize; real corpora repeat
     the same few thousand labels, so the per-executor-process cache turns
     the fuzzy pass into a dict lookup for the common case.
     """
     if label in canonical_label_set():
         return label, 1.0
     segs = label.split(".")
-    if max_distance == 1:
-        # deletion-index candidate generation (exact for d≤1), then the
-        # exact O(n) verification — same result set as the full scan
-        index = _bucket_deletion_index(segs[0], len(segs))
-        cands: set[str] = set()
-        for i in range(len(label) + 1):
-            probe = label if i == len(label) else label[:i] + label[i + 1:]
-            hit = index.get(probe)
-            if hit:
-                cands.update(hit)
-        bucket: tuple[str, ...] | set[str] = cands
-    else:
-        bucket = canonical_blocks().get((segs[0], len(segs)), ())
-    best: tuple[int, float, str] | None = None
-    for canon in bucket:
-        if max_distance == 1:  # exact fast path (see _within_one_edit)
-            d = 1 if _within_one_edit(label, canon) else 2
-        else:
-            d = levenshtein(label, canon, cap=max_distance)
-        if d > max_distance:
+    # deletion-index candidate generation (exact for d≤1), then the exact
+    # O(n) verification — same result set as the full bucket scan
+    index = _bucket_deletion_index(segs[0], len(segs))
+    cands: set[str] = set()
+    for i in range(len(label) + 1):
+        probe = label if i == len(label) else label[:i] + label[i + 1:]
+        hit = index.get(probe)
+        if hit:
+            cands.update(hit)
+    best: tuple[float, str] | None = None
+    for canon in cands:
+        if not _within_one_edit(label, canon):
             continue
         sim = trigram_similarity(label, canon)
-        key = (d, -sim, canon)
-        if best is None or key < (best[0], -best[1], best[2]):
-            best = (d, sim, canon)
+        if best is None or (-sim, canon) < (-best[0], best[1]):
+            best = (sim, canon)
     if best is None:
         return None, 0.0
-    return best[2], round(best[1], 6)
+    return best[1], round(best[0], 6)

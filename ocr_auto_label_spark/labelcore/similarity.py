@@ -141,25 +141,3 @@ def _color_part(colors1: tuple[str, ...], colors2: tuple[str, ...]) -> float:
     tuples — cached per distinct pair."""
     csim = color_similarity(list(colors1), list(colors2))
     return csim * 0.6 if csim >= 0.5 else 0.0
-
-
-def grouping_score_cached(
-    desc_l1: str | None,
-    desc_l2: str | None,
-    colors_t1: tuple[str, ...],
-    colors_t2: tuple[str, ...],
-    delta_ms: float,
-) -> float:
-    """``grouping_score`` for PRE-lowered descs and color tuples.
-
-    Identical results (asserted by test_grouping's equivalence test); the
-    two pair-level components become lru hits, so the sequential fold's
-    O(n·density) inner loop does dict lookups + the time decay instead of
-    re-tokenizing — descriptions and color sets repeat heavily inside a
-    time cluster."""
-    score = 0.0
-    if desc_l1 and desc_l2:
-        score += _text_tier(desc_l1, desc_l2)
-    score += _color_part(colors_t1, colors_t2)
-    score += max(0.0, 1.0 - (abs(delta_ms) / TIME_WINDOW_MS)) * 0.2
-    return score

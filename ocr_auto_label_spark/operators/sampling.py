@@ -95,6 +95,27 @@ def deterministic_split(
     return df.withColumn("bucket", bucket).withColumn("split", split)
 
 
+def _first_k_per_group(
+    df: DataFrame, group_col: str, id_col: str, quota: dict
+) -> DataFrame:
+    """Keep the first ``quota[g]`` rows of each group ``g`` in
+    ``(xxhash64(id), id)`` order, the split's hash family, so the
+    survivors are stable across runs, partitionings and engines.  Groups
+    missing from ``quota`` keep nothing.  One window shuffle keyed by
+    group; the quota folds into the filter as a literal CASE, so there is
+    no second join.  Adds ``mix_rank``."""
+    w = Window.partitionBy(group_col).orderBy(
+        checked_id_hash(F.col(id_col)), id_col
+    )
+    keep: Column = F.lit(0).cast("long")
+    for g in sorted(quota, key=str, reverse=True):
+        keep = F.when(F.col(group_col) == g, F.lit(quota[g])).otherwise(keep)
+    return (
+        df.withColumn("mix_rank", F.row_number().over(w))
+        .filter(F.col("mix_rank") <= keep)
+    )
+
+
 def mixture_sample(
     df: DataFrame,
     group_col: str,
@@ -109,15 +130,12 @@ def mixture_sample(
     ``(g*, n*, w*) = argmin n_g/w_g`` (ties → lexicographically smallest
     group), group g keeps ``n* · w_g // w*`` rows — pure integer
     arithmetic, so the DuckDB oracle reproduces every count exactly, and
-    ``keep_g ≤ n_g`` holds by construction.  WHICH rows survive is
-    deterministic too: rank within group by ``(xxhash64(id), id)`` and
-    keep the first ``keep_g`` — same hash family as the split, so the
-    sample is stable across runs, partitionings, and engines.
+    ``keep_g ≤ n_g`` holds by construction.  Which rows survive is
+    :func:`_first_k_per_group`'s hash rank.
 
     Scale shape: one bounded driver pull (a row per DOMAIN — dozens, not
     data-sized), one window shuffle keyed by group.  Skewed domains are
-    exactly the hot keys AQE splits; the rank threshold is a literal map
-    folded into the filter, so no second join.
+    exactly the hot keys AQE splits.
 
     Adds ``mix_rank``; returns only surviving rows.
     """
@@ -142,14 +160,7 @@ def mixture_sample(
     star = min(counts, key=lambda g: (Fraction(counts[g], weights[g]), g))
     n_star, w_star = counts[star], weights[star]
     keep = {g: n_star * weights[g] // w_star for g in counts}
-    w = Window.partitionBy(group_col).orderBy(checked_id_hash(F.col(id_col)), id_col)
-    keep_expr: Column = F.lit(None).cast("long")
-    for g in sorted(keep, reverse=True):
-        keep_expr = F.when(F.col(group_col) == g, F.lit(keep[g])).otherwise(keep_expr)
-    return (
-        df.withColumn("mix_rank", F.row_number().over(w))
-        .filter(F.col("mix_rank") <= keep_expr)
-    )
+    return _first_k_per_group(df, group_col, id_col, keep)
 
 
 def temperature_resample(
@@ -172,11 +183,8 @@ def temperature_resample(
     never per-executor, so libm/accumulation differences cannot split the
     cluster's view of the targets), largest-remainder rounding makes the
     targets sum EXACTLY to ``min(total, feasible)`` with a tie-break on
-    the keys as strings, and WHICH rows survive is the
-    ``(xxhash64(id), id)`` rank — stable across runs, partitionings, and
-    cluster sizes.  Scale shape: one bounded pull + one window shuffle
-    keyed by group; the target map folds into the filter as a literal
-    CASE (no second join).
+    the keys as strings, and which rows survive is
+    :func:`_first_k_per_group`'s hash rank.
 
     NULL groups raise.  Adds ``mix_rank``; returns only surviving rows.
     """
@@ -228,18 +236,7 @@ def temperature_resample(
         remaining = float(sum(open_groups.values()))
         if not progressed:
             break
-    w = Window.partitionBy(group_col).orderBy(
-        checked_id_hash(F.col(id_col)), id_col
-    )
-    keep_expr: Column = F.lit(0).cast("long")
-    for g in sorted(targets, key=str, reverse=True):
-        keep_expr = F.when(
-            F.col(group_col) == g, F.lit(targets[g])
-        ).otherwise(keep_expr)
-    return (
-        df.withColumn("mix_rank", F.row_number().over(w))
-        .filter(F.col("mix_rank") <= keep_expr)
-    )
+    return _first_k_per_group(df, group_col, id_col, targets)
 
 
 def cross_split_contamination(

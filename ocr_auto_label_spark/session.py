@@ -2,9 +2,10 @@
 
 Local sandbox runs ``local[N]``; the same config block is what we'd ship
 to a 1000-executor cluster (AQE, skew-join handling, Arrow batching).
-Iceberg catalog settings are pluggable via ``extra_conf`` — the sandbox
-has no Iceberg jars, so tests/bench read the same tables as parquet
-directories (the DataFrame lineage is identical downstream of the scan).
+Iceberg catalog settings reach ``getOrCreate`` from outside the code,
+through ``spark-submit --conf`` or spark-defaults.  The sandbox has no
+Iceberg jars, so tests/bench read the same tables as parquet directories
+(the DataFrame lineage is identical downstream of the scan).
 """
 
 from __future__ import annotations
@@ -18,11 +19,10 @@ def build_spark(
     app_name: str = "ocr-auto-label-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(master)
         # AQE: runtime re-plan, skew-join splitting, partition coalescing
@@ -45,7 +45,5 @@ def build_spark(
         .config("spark.ui.enabled", "false")
         # keep stdout/stderr clean for JSON-line consumers (bench, jobs)
         .config("spark.ui.showConsoleProgress", "false")
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()

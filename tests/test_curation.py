@@ -200,12 +200,13 @@ def test_curation_with_chunking(spark, tmp_path):
 
 def test_curation_survives_empty_corpus(spark, tmp_path):
     """Gates that reject every doc must yield a zeroed summary, not an
-    UNABLE_TO_INFER_SCHEMA crash on the zero-row curated read-back (the
-    schema-pinned read path)."""
+    UNABLE_TO_INFER_SCHEMA crash on a zero-row read-back (the
+    schema-pinned read path every artifact write goes through)."""
     out = str(tmp_path / "empty")
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     summary = curate_corpus(
-        spark, docs, out, min_tokens=10_000, pack_budget=512
+        spark, docs, out, min_tokens=10_000, pack_budget=512,
+        chunk_budget=32, bpe_merges=4,
     )
     assert summary["rows_quality_pass"] == 0
     assert summary["rows_after_dedup"] == 0
@@ -214,6 +215,9 @@ def test_curation_survives_empty_corpus(spark, tmp_path):
     assert summary["contaminated_grams"] == 0
     assert summary["n_packs"] == 0
     assert summary["packed_docs"] == 0
+    assert summary["n_chunks"] == 0
+    assert summary["oversize_chunk_rows"] == 0
+    assert summary["bpe_vocab_size"] == 0
 
 
 def test_curation_with_semantic_decontam(spark, tmp_path):
