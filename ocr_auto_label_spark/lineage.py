@@ -6,14 +6,23 @@ Design (works identically on a 1000-executor cluster):
   n_buckets)`` — a *deterministic* partition key, so the same rows land in
   the same bucket on every run regardless of file layout or parallelism.
 - Buckets are processed in waves.  Each wave is one fully-distributed
-  Spark action: filter to the wave's buckets → extract → write output
-  parquet ``partitionBy(part_bucket)`` with **dynamic partition
-  overwrite** (idempotent per bucket) → append one lineage row per bucket
+  Spark action: filter to the wave's buckets → extract → rebalance on
+  ``part_bucket`` → write output parquet ``partitionBy(part_bucket)`` with
+  **dynamic partition overwrite** (idempotent per bucket).  The rebalance
+  makes a wave write one file per bucket (plus one per skew split of a
+  bucket above the advisory partition size), not one per input split per
+  bucket.
+- Write-then-verify: the wave's lineage is recomputed from the bytes on
+  disk, reading only the wave's own ``part_bucket=b`` directories with the
+  written schema pinned, so verifying a wave costs one wave's files, not
+  the whole output written so far.  One lineage row per non-empty bucket
   ``(run_id, part_bucket, row_count, turns_with_label, candidate_count,
-  hit_rate, checksum, status)``.
+  hit_rate, checksum, status)`` is appended.
 - On restart with the same ``run_id``, completed buckets are read from the
   lineage table and anti-joined away; a bucket whose output write died
   mid-flight has no lineage row and is simply rewritten (overwrite).
+  Paths may be on any Hadoop filesystem (local, ``file://``, ``hdfs://``,
+  ``s3a://``).
 - ``checksum`` is an order-insensitive ``bit_xor(xxhash64(...))`` over the
   per-turn results, so two runs (any parallelism) can be compared
   bucket-for-bucket.
@@ -25,9 +34,8 @@ idempotent batch checkpoints instead of per-row DB mutations.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ocr_auto_label_spark.plans.extraction_pipeline import extract_turns
 
@@ -38,7 +46,11 @@ def write_wave_output(result: DataFrame, output: str, output_format: str = "parq
     - ``parquet`` (sandbox default): ``partitionBy(part_bucket)`` with
       dynamic partition overwrite (session.py sets
       ``partitionOverwriteMode=dynamic``) — only the wave's buckets are
-      replaced.
+      replaced.  A ``rebalance`` hint on ``part_bucket`` puts one hash
+      Exchange between the extraction UDF and the write, so the wave
+      writes one file per bucket: AQE packs small buckets into shared
+      tasks and splits a bucket above the advisory partition size
+      (``optimizeSkewsInRebalancePartitions``) into several files.
     - ``iceberg`` (catalog-conditional, reference S7 status-update
       semantics — upload.ts:904-926 / SURVEY §1.3): DataFrameWriterV2 —
       create the partitioned table on first write, then
@@ -60,13 +72,40 @@ def write_wave_output(result: DataFrame, output: str, output_format: str = "parq
                 .create()
             )
     else:
-        result.write.mode("overwrite").partitionBy("part_bucket").parquet(output)
+        (
+            result.hint("rebalance", "part_bucket")
+            .write.mode("overwrite").partitionBy("part_bucket").parquet(output)
+        )
 
 
 def read_output(spark: SparkSession, output: str, output_format: str = "parquet") -> DataFrame:
     if output_format == "iceberg":
         return spark.read.table(output)
     return spark.read.parquet(output)
+
+
+def _read_wave(
+    spark: SparkSession, output: str, output_format: str, wave: list[int], schema: StructType
+) -> DataFrame | None:
+    """The wave's written rows, or None when none of its buckets holds a
+    row.  Parquet opens only the wave's existing ``part_bucket=b``
+    directories, with ``basePath`` set and the written schema pinned: no
+    listing of earlier waves' output and no schema-inference job.  A
+    bucket with no rows has no directory and is skipped."""
+    if output_format == "iceberg":
+        return read_output(spark, output, output_format).filter(F.col("part_bucket").isin(wave))
+    paths = [f"{output}/part_bucket={b}" for b in wave]
+    paths = [p for p in paths if _exists(spark, p)]
+    if not paths:
+        return None
+    return spark.read.schema(schema).option("basePath", output).parquet(*paths)
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    """``path`` exists on its Hadoop filesystem (local, file://, hdfs://,
+    s3a://, ...)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
 
 
 def with_part_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -76,7 +115,7 @@ def with_part_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def completed_buckets(spark: SparkSession, lineage_path: str, run_id: str) -> set[int]:
-    if not os.path.exists(lineage_path):
+    if not _exists(spark, lineage_path):
         return set()
     rows = (
         spark.read.parquet(lineage_path)
@@ -142,10 +181,9 @@ def run_extraction_with_checkpoint(
         result = extract_turns(wave_df)
         write_wave_output(result, output_path, output_format)
         # recompute lineage from what was written (write-then-verify)
-        written = read_output(spark, output_path, output_format).filter(
-            F.col("part_bucket").isin(wave)
-        )
-        _lineage_rows(written, run_id).write.mode("append").parquet(lineage_path)
+        written = _read_wave(spark, output_path, output_format, wave, result.schema)
+        if written is not None:
+            _lineage_rows(written, run_id).write.mode("append").parquet(lineage_path)
         processed += len(wave)
     return {
         "run_id": run_id,

@@ -216,11 +216,15 @@ def curate_corpus(
             threshold=semdedup_threshold,
             id_col=VEC_ID_COL,
         )
-        evict_ids = evicted.select(F.col("id").alias(ID_COL))
-        # no explicit broadcast hint: the eviction list is usually much
-        # smaller than the corpus, but at aggressive thresholds it can be
-        # a large fraction of it — AQE picks broadcast vs shuffle from
-        # the measured size (the unigram_nll lesson, ADVICE r3)
+        # cached until the curated write: the count and the anti join
+        # would otherwise each run the whole pair search.  (An Observation
+        # on the join's eviction side reports nothing when AQE drops that
+        # side as empty: no evictions, or an empty corpus.)  No explicit
+        # broadcast hint: the eviction list is usually much smaller than
+        # the corpus, but at aggressive thresholds it can be a large
+        # fraction of it — AQE picks broadcast vs shuffle from the
+        # measured size (the unigram_nll lesson, ADVICE r3)
+        evict_ids = evicted.select(F.col("id").alias(ID_COL)).persist()
         sem_stats = {"semantic_evicted_ids": evict_ids.count()}
         deduped = deduped.join(evict_ids, ID_COL, "left_anti")
     if span_dedup_width > 0:
@@ -386,6 +390,8 @@ def curate_corpus(
     )
     curated_path = f"{output_dir}/curated"
     written = _write_back(spark, assigned, curated_path, partition_by="split")
+    if embeddings is not None:
+        evict_ids.unpersist()
     stage1 = obs_dedup.get
     mix_stats = {}
     if temperature_alpha is not None:

@@ -453,6 +453,32 @@ def test_curation_with_semantic_dedup(spark, tmp_path):
     assert len(sem_ids) < len(base_ids)  # the stage actually fired
 
 
+def test_semantic_dedup_count_when_aqe_drops_the_anti_join(spark, tmp_path):
+    """The eviction count does not depend on the anti join running its
+    eviction side: with no evictions (threshold 1.0) and with every
+    document gated out, AQE replaces the join by one of its inputs, and
+    the summary still reports the eviction-list size."""
+    from test_semdedup import _py_semdedup
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+
+    none = curate_corpus(
+        spark, docs, str(tmp_path / "none"), **GATES,
+        embeddings=emb, semdedup_centroids=16, semdedup_threshold=1.0,
+    )
+    assert none["semantic_evicted_ids"] == 0
+    assert none["rows_after_dedup"] > 0
+
+    gated = curate_corpus(
+        spark, docs, str(tmp_path / "gated"), min_tokens=10_000,
+        embeddings=emb, semdedup_centroids=16, semdedup_threshold=0.3,
+    )
+    _, _, want_evict = _py_semdedup(emb.collect())
+    assert gated["rows_quality_pass"] == 0
+    assert gated["semantic_evicted_ids"] == len({doc for _, doc in want_evict})
+
+
 def test_curation_with_bpe_tokenizer_training(spark, tmp_path):
     from collections import Counter
 

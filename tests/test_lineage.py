@@ -7,7 +7,9 @@ import pytest
 
 from ocr_auto_label_spark.datagen import transcripts_parquet
 from ocr_auto_label_spark.lineage import (
+    _lineage_rows,
     completed_buckets,
+    read_output,
     run_extraction_with_checkpoint,
     with_part_bucket,
 )
@@ -54,6 +56,79 @@ def test_resume_skips_completed_buckets(spark, paths):
     )
     assert summary["buckets_resumed"] == 8
     assert summary["buckets_processed"] == 0
+
+
+def test_resume_on_file_uri_lineage_path(spark, paths):
+    """A lineage path given as a ``file://`` URI is found on rerun, like a
+    plain local path (and an ``hdfs://``/``s3a://`` one on a cluster)."""
+    lineage = "file://" + paths["lineage"]
+    run_extraction_with_checkpoint(
+        spark, paths["input"], paths["output"], lineage,
+        run_id="u", n_buckets=8, wave_size=8,
+    )
+    summary = run_extraction_with_checkpoint(
+        spark, paths["input"], paths["output"], lineage,
+        run_id="u", n_buckets=8, wave_size=8,
+    )
+    assert summary["buckets_resumed"] == 8
+    assert summary["buckets_processed"] == 0
+    buckets = [r.part_bucket for r in spark.read.parquet(lineage).collect()]
+    assert sorted(buckets) == list(range(8))
+
+
+def test_each_wave_writes_one_file_per_bucket(spark, paths, tmp_path):
+    """An input of several files still yields one parquet file per bucket:
+    the sink rebalances on part_bucket instead of writing one file per
+    input split per bucket."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(paths["input"])
+    split = tmp_path / "split_input"
+    split.mkdir()
+    n = table.num_rows
+    for i in range(3):
+        part = table.slice(i * n // 3, (i + 1) * n // 3 - i * n // 3)
+        pq.write_table(part, str(split / f"part-{i}.parquet"))
+    run_extraction_with_checkpoint(
+        spark, str(split), paths["output"], paths["lineage"],
+        run_id="f", n_buckets=8, wave_size=4,
+    )
+    dirs = sorted(glob.glob(os.path.join(paths["output"], "part_bucket=*")))
+    assert len(dirs) == 8
+    files = {os.path.basename(d): len(glob.glob(os.path.join(d, "*.parquet"))) for d in dirs}
+    assert set(files.values()) == {1}, files
+    assert spark.read.parquet(paths["output"]).count() == n
+
+
+def test_wave_with_empty_buckets_completes(spark, paths, tmp_path):
+    """Buckets with no input rows have no output directory: the wave that
+    holds one (2) and the wave that holds only empty ones (6, 7) both
+    complete, and the lineage rows equal lineage recomputed from a full
+    read of the output."""
+    empty = [2, 6, 7]
+    holey = str(tmp_path / "holey_input")
+    (
+        with_part_bucket(spark.read.parquet(paths["input"]), 8)
+        .filter(~F.col("part_bucket").isin(empty))
+        .drop("part_bucket")
+        .write.parquet(holey)
+    )
+    summary = run_extraction_with_checkpoint(
+        spark, holey, paths["output"], paths["lineage"],
+        run_id="e", n_buckets=8, wave_size=3,
+    )
+    assert summary["buckets_processed"] == 8
+
+    def by_bucket(df):
+        return {r.part_bucket: r.asDict() for r in df.collect()}
+
+    got = by_bucket(spark.read.parquet(paths["lineage"]))
+    want = by_bucket(_lineage_rows(read_output(spark, paths["output"]), "e"))
+    assert set(got) == set(range(8)) - set(empty)
+    assert got == want
 
 
 def test_checksums_invariant_to_parallelism(spark, paths):

@@ -109,6 +109,43 @@ def test_extraction_stage_has_no_shuffle(spark):
     assert "ArrowEvalPython" in plan
 
 
+def test_extraction_sink_rebalances_on_part_bucket(spark, tmp_path):
+    """The plan the parquet sink executes has exactly one Exchange: a hash
+    Exchange on part_bucket between ArrowEvalPython and the file write,
+    so a wave writes one file per bucket."""
+    import re
+
+    from ocr_auto_label_spark.datagen import transcripts_parquet
+    from ocr_auto_label_spark.lineage import with_part_bucket, write_wave_output
+    from ocr_auto_label_spark.plans.extraction_pipeline import extract_turns
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_ids():
+        execs = store.executionsList()
+        return {execs.apply(i).executionId() for i in range(execs.size())}
+
+    before = execution_ids()
+    df = with_part_bucket(spark.read.parquet(transcripts_parquet(2_000)), 8)
+    write_wave_output(extract_turns(df), str(tmp_path / "out"))
+    plans = [store.execution(e).get().physicalPlanDescription()
+             for e in sorted(execution_ids() - before)]
+    writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(writes) == 1
+    tree, details = writes[0].split("\n\n", 1)
+    final = tree.split("== Initial Plan ==")[0]
+    assert final.count("Exchange (") == 1
+    exchange = re.search(r"Exchange \((\d+)\)", final)
+    python = re.search(r"ArrowEvalPython \((\d+)\)", final)
+    write = final.index("InsertIntoHadoopFsRelationCommand")
+    assert python is not None and write < exchange.start() < python.start()
+    args = re.search(
+        rf"\({exchange.group(1)}\) Exchange\n(?:.*\n)*?Arguments: (.*)", details
+    ).group(1)
+    assert args.startswith("hashpartitioning(part_bucket#"), args
+    assert "BatchEvalPython" not in writes[0]
+
+
 def test_ivf_index_probe_is_partition_pruned(spark, tmp_path):
     """A materialized IVF index read with an nprobe cell filter prunes at
     the partition level — the scan's partition filters carry ivf_cluster
