@@ -26,6 +26,7 @@ from ocr_auto_label_spark.functions.grammar_sql import (
     pattern_id_sql,
 )
 from ocr_auto_label_spark.labelcore.canonical import canonical_labels
+from ocr_auto_label_spark.operators.util import local_frame
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -48,32 +49,22 @@ def _sql_query(sql: str) -> Callable[[SparkSession, str], DataFrame]:
 
 # ---------------------------------------------------------------- dialects
 
-def _spark_tokens(col: str) -> str:
-    return f"split(lower(trim({col})), '\\\\s+')"
-
-
 def _duck_tokens(col: str) -> str:
     return f"regexp_split_to_array(lower(trim({col})), '\\s+')"
 
 
-def _lang_id_query_sql(dialect: str) -> str:
-    """text_language_id (operators/textstats.py) as a named-score-column
-    query: ONE token split per row and one set-intersect per language.
-    The round-1 formulation inlined ``array_contains(split(...), w)`` per
-    stopword, re-splitting the text ~20× per row (2× slower measured).
-    Score semantics identical (stopword lists are distinct, so
-    |tokens ∩ panel| = Σ contains); tie-break preserved: strict > while
-    visiting languages in ascending order ⇒ ties → smallest language."""
+def _lang_id_duck() -> str:
+    """text_language_id's oracle: ``textstats.language_id`` as a
+    named-score-column query, ONE token split per row and one
+    set-intersect per language.  Tie-break as in ``language_id``: strict
+    > while visiting languages in ascending order ⇒ ties → smallest
+    language."""
     from ocr_auto_label_spark.operators.textstats import LANG_STOPWORDS
 
-    tokens = _spark_tokens("text") if dialect == "spark" else _duck_tokens("text")
     score_cols = []
     for lang in sorted(LANG_STOPWORDS):
         words = ", ".join(f"'{w}'" for w in LANG_STOPWORDS[lang])
-        if dialect == "spark":
-            expr = f"size(array_intersect(toks, array({words})))"
-        else:
-            expr = f"len(list_distinct(list_intersect(toks, [{words}])))"
+        expr = f"len(list_distinct(list_intersect(toks, [{words}])))"
         score_cols.append(f"{expr} AS s_{lang}")
     guess, best = "'und'", "0"
     for lang in sorted(LANG_STOPWORDS):
@@ -82,26 +73,26 @@ def _lang_id_query_sql(dialect: str) -> str:
     return (
         f"SELECT lang, {guess} AS lang_guess, count(*) AS cnt FROM ("
         "SELECT lang, " + ", ".join(score_cols) + " FROM ("
-        f"SELECT lang, {tokens} AS toks FROM documents) t) s "
+        f"SELECT lang, {_duck_tokens('text')} AS toks FROM documents) t) s "
         "GROUP BY 1, 2"
     )
 
 
-def _textstats_sql(dialect: str) -> str:
-    tokens = _spark_tokens("text") if dialect == "spark" else _duck_tokens("text")
-    tlen = "size" if dialect == "spark" else "len"
-    flags = "" if dialect == "spark" else ", 'g'"
-    tc = f"{tlen}({tokens})"
-    pr = f"(length(text) - length(regexp_replace(text, '[^\\\\s\\\\w]', ''))) * 1.0 / greatest(length(text), 1)" \
-        if dialect == "spark" else \
-        f"(length(text) - length(regexp_replace(text, '[^\\s\\w]', ''{flags}))) * 1.0 / greatest(length(text), 1)"
+# text_quality_stats' per-lang panel: the regex of its BPE-style token count
+_BPE_PIECE_RX = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
+
+
+def _textstats_duck() -> str:
+    tokens = _duck_tokens("text")
+    tc = f"len({tokens})"
+    pr = "(length(text) - length(regexp_replace(text, '[^\\s\\w]', '', 'g'))) * 1.0 / greatest(length(text), 1)"
     length_band = "(CASE WHEN length(text) < 20 THEN 0.0 WHEN length(text) > 8000 THEN 0.3 ELSE 1.0 END)"
     mean_word = f"length(text) * 1.0 / greatest({tc}, 1)"
     word_band = f"(CASE WHEN {mean_word} >= 3 AND {mean_word} <= 12 THEN 1.0 ELSE 0.4 END)"
     quality = f"0.4 * {length_band} + 0.3 * (1 - {pr}) + 0.3 * {word_band}"
-    bpe = f"{tlen}(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]', 0))"
-    # CAST to DOUBLE: Spark parses 0.4-style literals as DECIMAL, DuckDB as
-    # DOUBLE — cast both so types and hashes line up
+    bpe = f"len(regexp_extract_all(text, '{_BPE_PIECE_RX}', 0))"
+    # CAST to DOUBLE: DuckDB parses 0.4-style literals as DOUBLE already;
+    # the cast keeps the output types in the driver-hash-safe family
     return (
         "SELECT lang, "
         f"CAST(round(avg({tc}), 4) AS DOUBLE) AS avg_tokens, "
@@ -129,24 +120,36 @@ def _text_quality_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         dsir_logweights,
         duplicated_span_stats,
         exact_group_quantiles,
+        punct_ratio,
+        quality_score,
         repetition_stats,
         stupid_backoff_scores,
         tfidf_top_terms,
+        token_count,
         unigram_nll,
     )
     from ocr_auto_label_spark.operators.util import ensure_parallelism
 
-    load_views(spark, sf_dir)
-    wide = spark.sql(_textstats_sql("spark"))
-    long_stats = wide.select(
-        F.col("lang").alias("k"),
-        F.col("cnt"),
-        F.explode(F.array(*[
-            F.struct(F.lit(m).alias("variant"), F.col(m).alias("val"))
-            for m in _TEXTSTATS_METRICS
-        ])).alias("x"),
-    ).select("x.variant", "k", "cnt", "x.val")
     docs = ensure_parallelism(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    text = F.col("text")
+    panel = (
+        token_count(text),
+        punct_ratio(text),
+        quality_score(text),
+        F.size(F.regexp_extract_all(text, F.lit(_BPE_PIECE_RX), F.lit(0))),
+    )
+    long_stats = docs.groupBy(F.col("lang").alias("k")).agg(
+        F.count(F.lit(1)).alias("cnt"),
+        F.array(*[
+            F.struct(
+                F.lit(m).alias("variant"),
+                F.round(F.avg(c), 4).cast("double").alias("val"),
+            )
+            for m, c in zip(_TEXTSTATS_METRICS, panel)
+        ]).alias("x"),
+    ).select(F.explode("x").alias("x"), "k", "cnt").select(
+        "x.variant", "k", "cnt", "x.val"
+    )
     nll = unigram_nll(docs, round_digits=None).select(
         F.lit("unigram_nll").alias("variant"),
         F.col("id").cast("string").alias("k"),
@@ -172,7 +175,7 @@ def _text_quality_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct-value-compressed path — the 100-TB exact-quantile shape),
     # oracled by DuckDB's independent quantile_disc implementation
     qs = exact_group_quantiles(
-        docs.select("lang", F.expr(f"size({_spark_tokens('text')})").alias("tc")),
+        docs.select("lang", token_count(text).alias("tc")),
         "tc", "lang",
     ).select(
         F.concat(F.lit("p"), F.col("percentile").cast("string"),
@@ -234,8 +237,8 @@ def _text_quality_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     lr_w, _, lr_scored = train_quality_lr(
         docs, label_expr=(F.col("lang") == "en")
     )
-    lrw = spark.createDataFrame(
-        [(b, lr_w[b]) for b in range(LR_BUCKETS)], "bucket int, w double"
+    lrw = local_frame(
+        spark, [(b, lr_w[b]) for b in range(LR_BUCKETS)], "bucket int, w double"
     ).select(
         F.lit("lr_weight").alias("variant"),
         F.col("bucket").cast("string").alias("k"),
@@ -333,7 +336,7 @@ def _text_quality_stats_duck() -> str:
     gram_hash = xxh64_str_staged_sql("FROM dvocab", "gram")
     lr_ctes, lr_final, lr_sig = _lr_duck_ctes()
     return f"""
-WITH w AS ({_textstats_sql('duck')}),
+WITH w AS ({_textstats_duck()}),
 toks AS (
   SELECT doc_id, unnest({_duck_tokens('text')}) AS word FROM documents),
 toksf AS (SELECT doc_id, word FROM toks WHERE word <> ''),
@@ -556,7 +559,7 @@ def _grammar_codes() -> list[str]:
 
 
 def _grammar_validate_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = spark.createDataFrame([(c,) for c in _grammar_codes()], "code: string")
+    df = local_frame(spark, [(c,) for c in _grammar_codes()], "code: string")
     pid = pattern_id_column(F.col("code"))
     return df.select(
         "code",
@@ -695,9 +698,10 @@ def _x4_confusion_repair_duck() -> str:
 def _fuzzy_join_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_auto_label_spark.operators.fuzzy_join import fuzzy_canonical_join
 
-    codes = [(i, c) for i, c in enumerate(_grammar_codes())]
-    df = spark.createDataFrame(codes, "code_id: int, code: string")
-    return fuzzy_canonical_join(df)
+    codes = list(enumerate(_grammar_codes()))
+    return fuzzy_canonical_join(
+        local_frame(spark, codes, "code_id: int, code: string")
+    )
 
 
 def _fuzzy_join_duck() -> str:
@@ -1017,23 +1021,24 @@ def _extract_best_labels_duck() -> str:
 def _extract_lineage_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bucket lineage stats off the REAL operator chain
     (``with_part_bucket`` = pmod(xxhash64(conv_id), 16), Arrow
-    ``extract_turns``) over the pinned corpus — oracle-backed since r4:
-    XXH64 itself is compiled to DuckDB SQL (functions/xxh64_sql.py), so
+    ``extract_turns``, the job's own lineage aggregate
+    ``lineage._lineage_rows``) over the pinned corpus — oracle-backed
+    since r4: XXH64 itself is compiled to DuckDB SQL (functions/xxh64_sql.py), so
     the bucket assignment AND the has-label extraction both replay in the
     oracle.  The at-scale lineage/resume machinery stays exercised by
     ``jobs/run_extraction.py`` + tests/test_lineage.py."""
     from ocr_auto_label_spark.datagen import transcripts_parquet
-    from ocr_auto_label_spark.lineage import with_part_bucket
+    from ocr_auto_label_spark.lineage import _lineage_rows, with_part_bucket
     from ocr_auto_label_spark.operators.util import ensure_parallelism
     from ocr_auto_label_spark.plans.extraction_pipeline import extract_turns
 
     pinned = ensure_parallelism(spark.read.parquet(transcripts_parquet(2_000)))
-    df = with_part_bucket(pinned, 16)
-    out = extract_turns(df)
-    return out.groupBy("part_bucket").agg(
-        F.count(F.lit(1)).alias("row_count"),
-        F.sum((F.size("candidates") > 0).cast("long")).alias("turns_with_label"),
-        F.round(F.avg((F.size("candidates") > 0).cast("double")), 6).alias("hit_rate"),
+    out = extract_turns(with_part_bucket(pinned, 16))
+    return _lineage_rows(out, "entry").select(
+        "part_bucket",
+        "row_count",
+        "turns_with_label",
+        F.round("hit_rate", 6).alias("hit_rate"),
     )
 
 
@@ -1920,7 +1925,8 @@ def _dedup_exact_and_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     to (variant, k, v1, v2):
 
     - ``exact_group``: k = md5(text), v1 = keep_id (min doc_id),
-      v2 = dup_count — one hash shuffle with map-side combine;
+      v2 = dup_count — the rows ``operators.dedup.exact_dedup`` keeps
+      (the curation job's dedup), one hash-window shuffle;
     - ``split_assign``: k = doc_id, v1 = hash bucket (pmod(xxhash64(id),
       100)), v2 = split index — narrow projection, no shuffle;
     - ``split_summary``: k = split name, v1 = n_docs, v2 = split index;
@@ -1950,6 +1956,7 @@ def _dedup_exact_and_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash-compared; the decontamination counts are exact integers
     computed by an independent DuckDB n-gram pipeline over the same
     split."""
+    from ocr_auto_label_spark.operators.dedup import exact_dedup
     from ocr_auto_label_spark.operators.sampling import (
         cross_split_contamination,
         deterministic_split,
@@ -1957,12 +1964,13 @@ def _dedup_exact_and_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ocr_auto_label_spark.operators.util import ensure_parallelism
 
-    load_views(spark, sf_dir)
-    exact = spark.sql(
-        "SELECT 'exact_group' AS variant, md5(text) AS k, "
-        "min(doc_id) AS v1, count(*) AS v2 FROM documents GROUP BY md5(text)"
-    )
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    exact = exact_dedup(docs).select(
+        F.lit("exact_group").alias("variant"),
+        F.md5("text").alias("k"),
+        F.col("doc_id").alias("v1"),
+        F.col("dup_count").alias("v2"),
+    )
     assigned = deterministic_split(
         docs, "doc_id", _SPLIT_WEIGHTS, _SPLIT_NAMES
     )
@@ -2078,7 +2086,8 @@ def _dedup_exact_and_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CTE-for-CTE.  The trained vocabulary is a sized LocalRelation, so
     # the encode leg's join broadcasts the vocabulary, not the documents
     bmerges, bwords = bpe_train(docs, _BPE_MERGES)
-    bpe_merge = spark.createDataFrame(
+    bpe_merge = local_frame(
+        spark,
         [
             (f"{m['step']}/{m['a']}+{m['b']}", m["total"], m["step"])
             for m in bmerges
@@ -2400,6 +2409,7 @@ def _embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         cosine_neardup_pairs,
         hyperplane_signature,
         semdedup,
+        semdedup_evictions,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -2409,14 +2419,14 @@ def _embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id_b").cast("long").alias("id_b"),
         "cosine",
     )
-    a, p, e = semdedup(emb, n_centroids=16, threshold=0.3)
+    a, p, _ = semdedup(emb, n_centroids=16, threshold=0.3)
     # the assignment subtree feeds three union legs (assign/pair/evict) —
     # checkpoint the two small outputs so it runs once per build, and
-    # derive the evict leg from the CHECKPOINTED pairs (same definition
-    # as semdedup's own; the ANN-entry precedent)
+    # derive the evict leg from the CHECKPOINTED pairs (the ANN-entry
+    # precedent)
     a = a.localCheckpoint(eager=True)
     p = p.localCheckpoint(eager=True)
-    e = p.select("sd_cluster", F.col("id_b").alias("id")).distinct()
+    e = semdedup_evictions(p)
     asg = a.select(
         F.lit("semdedup_assign").alias("variant"),
         F.col("vec_id").cast("long").alias("id_a"),
@@ -2823,8 +2833,12 @@ FROM pt JOIN bt USING (vec_id)
 
 
 def _lang_id_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    load_views(spark, sf_dir)
-    return spark.sql(_lang_id_query_sql("spark"))
+    from ocr_auto_label_spark.operators.textstats import language_id
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return docs.groupBy(
+        "lang", language_id(F.col("text")).alias("lang_guess")
+    ).agg(F.count(F.lit(1)).alias("cnt"))
 
 
 def _auto_group_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3934,7 +3948,7 @@ REGISTRY: dict[str, tuple[object, str | None]] = {
     # long-normalized panel metrics + the unigram-NLL corpus-LM quality
     # proxy (real operator, AQE-chosen vocab join) in one entry
     "text_quality_stats": (_text_quality_stats_spark, _text_quality_stats_duck()),
-    "text_language_id": (_lang_id_spark, _lang_id_query_sql("duck")),
+    "text_language_id": (_lang_id_spark, _lang_id_duck()),
     # --- multimodal (binary payload + typed metadata; codec pluggable) ---
     # golden-replay oracle since r5 (see _multimodal_profile_duck's
     # docstring for exactly what the row does and does not certify)

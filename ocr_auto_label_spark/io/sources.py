@@ -1,8 +1,5 @@
 """Sources and sinks (SURVEY.md §2.1).
 
-- ``read_transcripts``: the primary scan.  Format is pluggable: parquet in
-  the sandbox, ``iceberg`` on a cluster with a catalog configured (the
-  downstream plan is identical — S1/S2).
 - ``export_csv``: the metadata-export sink (S8, images.ts:688-863):
   ordered by ts, header on, nested columns serialized to JSON only at the
   boundary (X13/X15), summary JSON sidecar (A7).
@@ -15,10 +12,6 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def read_transcripts(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    return spark.read.format(fmt).load(path)
 
 
 def export_csv(df: DataFrame, out_dir: str, order_cols: list[str] | None = None,

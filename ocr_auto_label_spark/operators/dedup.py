@@ -3,7 +3,8 @@
 Five strategies, all built from JVM-side column expressions (zero Python
 in the hot path) and designed for 100TB inputs:
 
-- exact:          md5-hash groupBy — one shuffle on the hash key.
+- exact:          md5-hash window — one shuffle on the hash key, keeps
+                   the min-id row of each group.
 - shingle Jaccard: blocked pairwise 3-gram Jaccard — equi-join blocking
                    keys bound the candidate-pair explosion.
 - MinHash + LSH:  shingles → k minhashes → b bands → bucket equi-join.
@@ -17,7 +18,7 @@ in the hot path) and designed for 100TB inputs:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ocr_auto_label_spark.operators.textstats import (
     all_word_ngrams, cased_tokens, let, word_tokens,
@@ -50,18 +51,19 @@ def word_shingles(col_name: str, width: int = 3) -> Column:
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact duplicate groups by content hash; keeps min id as canonical.
+    """Keep the min-id row of each exact-duplicate group (the rows sharing
+    ``md5(text)``), with ``dup_count``, the group's size.
 
-    Output: (content_hash, keep_id, dup_count).  Single shuffle on the
-    hash; partial aggregation (map-side combine) does the heavy lifting.
-    """
+    One window shuffle on the content hash, no join; row number and group
+    size share the window, and a caller that drops ``dup_count`` drops
+    its computation with it."""
+    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(id_col)
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return (
-        df.select(F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col))
-        .groupBy("content_hash")
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count(F.lit(1)).alias("dup_count"),
-        )
+        df.withColumn("__rn", F.row_number().over(w))
+        .withColumn("dup_count", F.count(F.lit(1)).over(whole))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
     )
 
 

@@ -17,12 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ocr_auto_label_spark.labelcore.canonical import canonical_labels
+from ocr_auto_label_spark.operators.util import local_frame
 from ocr_auto_label_spark.schemas import CANONICAL_SCHEMA
 
 
 def canonical_dim(spark: SparkSession) -> DataFrame:
     """The grammar-derived canonical dimension table (2,000 rows)."""
-    return spark.createDataFrame(list(canonical_labels()), CANONICAL_SCHEMA)
+    return local_frame(spark, canonical_labels(), CANONICAL_SCHEMA)
 
 
 def _block_key(col: F.Column) -> tuple[F.Column, F.Column]:

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ocr_auto_label_spark.operators.util import local_frame
+
 MEDIA_SCHEMA = StructType([
     StructField("media_id", LongType()),
     StructField("media_type", StringType()),  # image | audio | video
@@ -115,7 +117,7 @@ def synth_media(spark: SparkSession, n: int = 64, seed: int = 13) -> DataFrame:
     Audio rows carry REAL WAV/PCM16 payloads (decodable by
     ``WavAudioCodec``); image/video payloads are opaque bytes (their
     decoders are environment-blocked, see ``PillowImageCodec``)."""
-    return spark.createDataFrame(synth_media_rows(n, seed), MEDIA_SCHEMA)
+    return local_frame(spark, synth_media_rows(n, seed), MEDIA_SCHEMA)
 
 
 class MediaCodec:

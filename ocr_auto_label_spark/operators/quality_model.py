@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ocr_auto_label_spark.operators.util import local_frame
+
 LR_BUCKETS = 64
 LR_RATE = 0.5  # power of two: the scaling step is exact in binary
 LR_ITERATIONS = 3
@@ -123,8 +125,8 @@ def train_quality_lr(
         raise ValueError("train_quality_lr: no documents with tokens")
     w = [0.0] * n_buckets
     for _ in range(iterations):
-        wdf = spark.createDataFrame(
-            [(b, w[b]) for b in range(n_buckets)], "bucket int, w double"
+        wdf = local_frame(
+            spark, [(b, w[b]) for b in range(n_buckets)], "bucket int, w double"
         )
         errs = _scores(feats, wdf).select(
             "id", (F.col("score") - F.col("y")).alias("e")
@@ -148,7 +150,7 @@ def train_quality_lr(
             w[b] - lr * (gmap.get(b, 0.0) / float(n_docs))
             for b in range(n_buckets)
         ]
-    wdf = spark.createDataFrame(
-        [(b, w[b]) for b in range(n_buckets)], "bucket int, w double"
+    wdf = local_frame(
+        spark, [(b, w[b]) for b in range(n_buckets)], "bucket int, w double"
     )
     return w, feats, _scores(feats, wdf)

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ocr_auto_label_spark.operators.textstats import word_terms
+from ocr_auto_label_spark.operators.util import local_frame
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -122,7 +123,7 @@ def write_search_index(
     so a write that fails part-way leaves an index readers reject."""
 
     def write_meta(n: int | None) -> None:
-        meta = df.sparkSession.createDataFrame([(n,)], "n_buckets int")
+        meta = local_frame(df.sparkSession, [(n,)], "n_buckets int")
         meta.write.mode("overwrite").parquet(f"{path}/meta")
 
     write_meta(None)
@@ -174,7 +175,7 @@ def term_buckets(spark, terms: list[str], n_buckets: int) -> list[int]:
     hash family stays the single JVM implementation (the same device
     ``lsh_bucketed_topk`` uses for the query signature).  Bounded pull:
     len(terms) rows."""
-    tdf = spark.createDataFrame([(t,) for t in terms], "term string")
+    tdf = local_frame(spark, [(t,) for t in terms], "term string")
     rows = tdf.select(
         F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("b")
     ).collect()

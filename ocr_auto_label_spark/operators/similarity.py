@@ -1,6 +1,7 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_sim``: JVM-side cosine via zip_with + aggregate — no Python.
+- ``dot_sql``/``norm_sql``: the one JVM-side cosine kernel (zip_with +
+  aggregate, double accumulation) every scorer below is built from.
 - ``brute_force_topk``: baseline exact top-k against one query vector
   (broadcast the query; one narrow pass + a single top-k sort).
 - ``lsh_bucketed_topk``: the scale path — random-hyperplane signatures
@@ -14,19 +15,27 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ocr_auto_label_spark.operators.util import ensure_parallelism
+from ocr_auto_label_spark.operators.util import ensure_parallelism, local_frame
+
+
+def dot_sql(a: str, b: str) -> str:
+    """SQL for the dot product of two array expressions, summed in order
+    as doubles."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * y), 0D, (s, v) -> s + v)"
+
+
+def norm_sql(a: str) -> str:
+    """SQL for the L2 norm of an array expression, summed in order as
+    doubles."""
+    return f"sqrt(aggregate({a}, 0D, (s, v) -> s + cast(v as double) * v))"
 
 
 def dot(a: str, b: str) -> Column:
-    return F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * y), 0D, (s, v) -> s + v)")
+    return F.expr(dot_sql(a, b))
 
 
 def norm(a: str) -> Column:
-    return F.expr(f"sqrt(aggregate({a}, 0D, (s, v) -> s + cast(v as double) * v))")
-
-
-def cosine_sim(a: str, b: str) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    return F.expr(norm_sql(a))
 
 
 def brute_force_topk(
@@ -46,12 +55,7 @@ def brute_force_topk(
     scored = ensure_parallelism(df).select(
         F.col(id_col),
         F.round(
-            F.expr(
-                f"aggregate(zip_with({vec_col}, {qlit}, (x, y) -> cast(x as double) * y), 0D, (s, v) -> s + v)"
-                f" / (sqrt(aggregate({vec_col}, 0D, (s, v) -> s + cast(v as double) * v))"
-                f" * sqrt(aggregate({qlit}, 0D, (s, v) -> s + v * v)))"
-            ),
-            round_digits,
+            dot(vec_col, qlit) / (norm(vec_col) * norm(qlit)), round_digits
         ).alias("cosine"),
     )
     # ordering on the ROUNDED score keeps the top-k boundary stable across
@@ -65,10 +69,10 @@ def hyperplane_signature(vec_col: str, bits: int = 8, dim: int = 64) -> Column:
     Plane p's component for dimension i is ±1 from bit parity of
     xxhash64(i, p) — derived, not sampled, so every run/cluster computes
     identical signatures."""
-    plane_dot = (
-        f"aggregate(zip_with({vec_col}, transform(sequence(0, {dim - 1}),"
-        " i -> if(((xxhash64(i, p) >> 1) & 1) = 1, 1D, -1D)),"
-        " (x, w) -> cast(x as double) * w), 0D, (s, v) -> s + v)"
+    plane_dot = dot_sql(
+        vec_col,
+        f"transform(sequence(0, {dim - 1}),"
+        " i -> if(((xxhash64(i, p) >> 1) & 1) = 1, 1D, -1D))",
     )
     return F.expr(
         f"aggregate(sequence(0, {bits - 1}), cast(0 as int), (acc, p) -> "
@@ -95,7 +99,7 @@ def lsh_bucketed_topk(
     # Query signature via one tiny Spark job using the exact same derived
     # planes (keeps the hash family in one place: the JVM expression).
     spark = df.sparkSession
-    qdf = spark.createDataFrame([(query_vec,)], f"{vec_col}: array<double>")
+    qdf = local_frame(spark, [(query_vec,)], f"{vec_col}: array<double>")
     qsig = qdf.select(hyperplane_signature(vec_col, bits, dim).alias("s")).collect()[0].s
     bucket = df.filter(sig == F.lit(qsig))
     return brute_force_topk(bucket, query_vec, k, vec_col, id_col)
@@ -162,13 +166,10 @@ def ivf_assign(
     cent_items = _centroid_struct_items(centroids)
     # strict > keeps the first (lowest c_id) on score ties — deterministic;
     # the epsilon keeps zero vectors at score 0 instead of NaN
+    score = f"{dot_sql(vec_col, 'c.c_vec')} / (__ivf_vn * c.c_norm + 1e-300)"
     best = (
         f"aggregate(array({cent_items}), named_struct('s', cast(-2.0 as double), 'cid', -1), "
-        "(acc, c) -> if("
-        f"  aggregate(zip_with({vec_col}, c.c_vec, (x, y) -> cast(x as double) * y), 0D, (s, v) -> s + v)"
-        "   / (__ivf_vn * c.c_norm + 1e-300) > acc.s, "
-        f"  named_struct('s', aggregate(zip_with({vec_col}, c.c_vec, (x, y) -> cast(x as double) * y), 0D, (s, v) -> s + v)"
-        "    / (__ivf_vn * c.c_norm + 1e-300), 'cid', c.c_id), acc)).cid"
+        f"(acc, c) -> if({score} > acc.s, named_struct('s', {score}, 'cid', c.c_id), acc)).cid"
     )
     assigned = (
         ensure_parallelism(df)
@@ -177,6 +178,19 @@ def ivf_assign(
         .drop("__ivf_vn")
     )
     return assigned, centroids
+
+
+def _probe_cells(
+    centroids: list[tuple[int, list[float]]], query_vec: list[float], nprobe: int
+) -> list[int]:
+    """The ``nprobe`` centroid ids nearest the query by cosine, picked on
+    the driver (the centroid table is tiny)."""
+    import numpy as np
+
+    q = np.asarray([float(v) for v in query_vec])
+    cmat = np.asarray([v for _, v in centroids])
+    sims = (cmat @ q) / (np.linalg.norm(cmat, axis=1) * np.linalg.norm(q) + 1e-12)
+    return [centroids[i][0] for i in np.argsort(-sims)[:nprobe]]
 
 
 def ivf_topk(
@@ -192,13 +206,8 @@ def ivf_topk(
     re-score inside them.  Driver picks the probe cells with numpy (the
     centroid table is tiny); recall grows with nprobe (nprobe ==
     n_centroids is exhaustive = brute force)."""
-    import numpy as np
-
     assigned, centroids = ivf_assign(df, n_centroids, vec_col, id_col)
-    q = np.asarray([float(v) for v in query_vec])
-    cmat = np.asarray([v for _, v in centroids])
-    sims = (cmat @ q) / (np.linalg.norm(cmat, axis=1) * np.linalg.norm(q) + 1e-12)
-    probes = [centroids[i][0] for i in np.argsort(-sims)[:nprobe]]
+    probes = _probe_cells(centroids, query_vec, nprobe)
     cell = assigned.filter(F.col("ivf_cluster").isin(probes))
     return brute_force_topk(cell, [float(v) for v in query_vec], k, vec_col, id_col)
 
@@ -232,12 +241,7 @@ def ivf_probe_index(
 ) -> DataFrame:
     """Top-k against a materialized IVF index: pick nprobe cells on the
     driver (tiny centroid table), scan only those partitions."""
-    import numpy as np
-
-    q = np.asarray([float(v) for v in query_vec])
-    cmat = np.asarray([v for _, v in centroids])
-    sims = (cmat @ q) / (np.linalg.norm(cmat, axis=1) * np.linalg.norm(q) + 1e-12)
-    probes = [centroids[i][0] for i in np.argsort(-sims)[:nprobe]]
+    probes = _probe_cells(centroids, query_vec, nprobe)
     cell = spark.read.parquet(path).filter(F.col("ivf_cluster").isin(probes))
     return brute_force_topk(cell, [float(v) for v in query_vec], k, vec_col, id_col)
 
@@ -267,9 +271,7 @@ def cosine_neardup_pairs(
         *[F.col(c) for c in block_cols],
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        F.expr(
-            f"sqrt(aggregate({vec_col}, 0D, (s, v) -> s + cast(v as double) * v))"
-        ).alias("n"),
+        norm(vec_col).alias("n"),
     )
     a, b = base.alias("a"), base.alias("b")
     cond = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block_cols]
@@ -284,13 +286,7 @@ def cosine_neardup_pairs(
             F.col("a.n").alias("na"), F.col("b.n").alias("nb"),
         )
     )
-    cos = F.round(
-        F.expr(
-            "aggregate(zip_with(va, vb, (x, y) -> cast(x as double) * y), 0D, (s, v) -> s + v)"
-            " / (na * nb)"
-        ),
-        6,
-    )
+    cos = F.round(dot("va", "vb") / (F.col("na") * F.col("nb")), 6)
     return (
         pairs.select(*block_cols, "id_a", "id_b", cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
@@ -320,9 +316,7 @@ def semdedup_assign(
 
     Returns the input plus ``sd_cluster`` (int) and ``sd_cos`` (double,
     rounded similarity to the winning centroid).  At corpus scale pick
-    k ≈ n/target_cluster_size; beyond a few hundred centroids use
-    :func:`semdedup_assign_joined` — the broadcast-join + partial-agg
-    form, pytest-asserted byte-identical to this one.
+    k ≈ n/target_cluster_size.
     """
     centroids = _pick_centroids(df, n_centroids, vec_col, id_col)
     if not centroids:
@@ -334,8 +328,7 @@ def semdedup_assign(
     # fold would inline the dot twice and stall codegen at larger k)
     scores = (
         f"transform(array({cent_items}), c -> "
-        f"round(aggregate(zip_with({vec_col}, c.c_vec, (x, y) -> cast(x as double) * y),"
-        f" 0D, (s, v) -> s + v) / (__sd_vn * c.c_norm), {round_digits}))"
+        f"round({dot_sql(vec_col, 'c.c_vec')} / (__sd_vn * c.c_norm), {round_digits}))"
     )
     return (
         ensure_parallelism(df)
@@ -347,62 +340,6 @@ def semdedup_assign(
             F.expr("cast(array_position(__sd_scores, sd_cos) - 1 as int)"),
         )
         .drop("__sd_vn", "__sd_scores")
-    )
-
-
-def semdedup_assign_joined(
-    df: DataFrame,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_digits: int = 6,
-) -> DataFrame:
-    """The large-k form of :func:`semdedup_assign` (same centroid rule,
-    same rounded-argmax semantics — asserted equivalent in pytest):
-    instead of folding the centroid table into one literal expression
-    (codegen-friendly only up to ~a few hundred centroids), broadcast it
-    as a real k-row frame and take ``max(struct(score, -c_id))`` per id
-    — partial aggregation collapses each row's k candidates map-side, so
-    the single shuffle carries one row per input row regardless of k.
-    Struct ordering is lexicographic: max score first, then max(-c_id) =
-    lowest centroid id on exact rounded ties — identical tie-break to
-    the first-match ``array_position``.  Returns (id, sd_cluster,
-    sd_cos) only; join back to the corpus for the full row."""
-    import math
-
-    centroids = _pick_centroids(df, n_centroids, vec_col, id_col)
-    if not centroids:
-        raise ValueError("semdedup_assign_joined: input has no vectors")
-    spark = df.sparkSession
-    cent = spark.createDataFrame(
-        [(i, v, math.sqrt(sum(x * x for x in v))) for i, v in centroids],
-        "c_id int, c_vec array<double>, c_norm double",
-    )
-    scored = (
-        ensure_parallelism(df)
-        .select(F.col(id_col), F.col(vec_col).alias("v"))
-        .withColumn("__vn", norm("v"))
-        .join(F.broadcast(cent))
-        .select(
-            id_col,
-            "c_id",
-            F.round(
-                F.expr(
-                    "aggregate(zip_with(v, c_vec, (x, y) -> cast(x as double) * y),"
-                    " 0D, (s, v) -> s + v)"
-                )
-                / (F.col("__vn") * F.col("c_norm")),
-                round_digits,
-            ).alias("score"),
-        )
-    )
-    best = scored.groupBy(id_col).agg(
-        F.max(F.struct(F.col("score"), (-F.col("c_id")).alias("neg_cid"))).alias("m")
-    )
-    return best.select(
-        id_col,
-        (-F.col("m.neg_cid")).cast("int").alias("sd_cluster"),
-        F.col("m.score").alias("sd_cos"),
     )
 
 
@@ -445,8 +382,13 @@ def semdedup(
         id_col=id_col,
         keep_block_cols=True,
     )
-    evicted = pairs.select("sd_cluster", F.col("id_b").alias("id")).distinct()
-    return assign, pairs, evicted
+    return assign, pairs, semdedup_evictions(pairs)
+
+
+def semdedup_evictions(pairs: DataFrame) -> DataFrame:
+    """Distinct (sd_cluster, id) losing at least one ``semdedup`` pair:
+    the keep-lowest-id policy (``id_b`` is the larger id of a pair)."""
+    return pairs.select("sd_cluster", F.col("id_b").alias("id")).distinct()
 
 
 def pq_train(
@@ -516,10 +458,7 @@ def _pq_code_expr(codebooks: list[list[list[float]]], nvec_col: str) -> str:
 
 
 def _normalized_vec_expr(vec_col: str) -> str:
-    return (
-        f"transform({vec_col}, x -> cast(x as double) / "
-        f"(sqrt(aggregate({vec_col}, 0D, (a, v) -> a + cast(v as double) * v)) + 1e-300))"
-    )
+    return f"transform({vec_col}, x -> cast(x as double) / ({norm_sql(vec_col)} + 1e-300))"
 
 
 def pq_encode(
@@ -543,19 +482,12 @@ def pq_encode(
     )
 
 
-def pq_topk(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    query_vec: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ADC search: per-subspace LUT of query↔centroid squared distances
-    (computed driver-side — m×k scalars), approx distance = Σ LUT[s][code
-    s], top-k ascending.  Scans CODES only; recall < 1 by construction
-    (the quantization error), brute_force_topk is the exact baseline.
-    Output: (vec_id, approx_d2) — rounded for cross-run stability."""
+def _adc_distance_sql(
+    codebooks: list[list[list[float]]], query_vec: list[float]
+) -> str:
+    """SQL for the ADC approximate squared distance of ``pq_code`` to the
+    unit-normalized query: Σ over subspaces of a driver-side lookup table
+    of query↔centroid squared distances (m×k scalars)."""
     import numpy as np
 
     q = np.asarray([float(v) for v in query_vec])
@@ -569,14 +501,29 @@ def pq_topk(
             lut.append(float(np.sum((qs - np.asarray(cent)) ** 2)))
     kk = len(codebooks[0])
     lut_sql = "array({})".format(", ".join(f"cast({x!r} as double)" for x in lut))
-    dist = (
+    return (
         f"aggregate(sequence(0, {m - 1}), 0D, (a, s) -> "
         f"a + element_at({lut_sql}, s * {kk} + element_at(pq_code, s + 1) + 1))"
     )
+
+
+def pq_topk(
+    df: DataFrame,
+    codebooks: list[list[list[float]]],
+    query_vec: list[float],
+    k: int = 10,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """ADC search: per-subspace LUT of query↔centroid squared distances
+    (computed driver-side — m×k scalars), approx distance = Σ LUT[s][code
+    s], top-k ascending.  Scans CODES only; recall < 1 by construction
+    (the quantization error), brute_force_topk is the exact baseline.
+    Output: (vec_id, approx_d2) — rounded for cross-run stability."""
     encoded = pq_encode(df, codebooks, vec_col, id_col)
     scored = encoded.select(
         F.col("id").alias(id_col),
-        F.round(F.expr(dist), 6).alias("approx_d2"),
+        F.round(F.expr(_adc_distance_sql(codebooks, query_vec)), 6).alias("approx_d2"),
     )
     return scored.orderBy(F.asc("approx_d2"), F.col(id_col)).limit(k)
 
@@ -620,29 +567,10 @@ def ivfpq_probe_index(
     """Top-k against a materialized IVF-PQ index: pick nprobe cells on
     the driver (tiny centroid table), scan only those partitions, rank by
     codes-only ADC distance.  Output: (vec_id, approx_d2)."""
-    import numpy as np
-
-    q = np.asarray([float(v) for v in query_vec])
-    cmat = np.asarray([v for _, v in centroids])
-    sims = (cmat @ q) / (np.linalg.norm(cmat, axis=1) * np.linalg.norm(q) + 1e-12)
-    probes = [centroids[i][0] for i in np.argsort(-sims)[:nprobe]]
-
-    qn = q / (np.linalg.norm(q) + 1e-300)
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    kk = len(codebooks[0])
-    lut: list[float] = []
-    for s, book in enumerate(codebooks):
-        qs = qn[s * sub:(s + 1) * sub]
-        for cent in book:
-            lut.append(float(np.sum((qs - np.asarray(cent)) ** 2)))
-    lut_sql = "array({})".format(", ".join(f"cast({x!r} as double)" for x in lut))
-    dist = (
-        f"aggregate(sequence(0, {m - 1}), 0D, (a, s) -> "
-        f"a + element_at({lut_sql}, s * {kk} + element_at(pq_code, s + 1) + 1))"
-    )
+    probes = _probe_cells(centroids, query_vec, nprobe)
     cells = spark.read.parquet(path).filter(F.col("ivf_cluster").isin(probes))
     scored = cells.select(
-        F.col("id").alias(id_col), F.round(F.expr(dist), 6).alias("approx_d2")
+        F.col("id").alias(id_col),
+        F.round(F.expr(_adc_distance_sql(codebooks, query_vec)), 6).alias("approx_d2"),
     )
     return scored.orderBy(F.asc("approx_d2"), F.col(id_col)).limit(k)

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ocr_auto_label_spark.operators.textstats import word_terms
+from ocr_auto_label_spark.operators.util import local_frame
 
 CMS_DEPTH = 4
 CMS_WIDTH = 1024
@@ -108,7 +109,7 @@ def cms_estimate(
     if len(set(terms)) != len(terms):
         raise ValueError("cms_estimate: probe_terms must be distinct")
     spark = sketch.sparkSession
-    probes = spark.createDataFrame([(t,) for t in terms], "term string")
+    probes = local_frame(spark, [(t,) for t in terms], "term string")
     cells = probes.select(
         "term",
         F.explode(
@@ -284,7 +285,7 @@ def bloom_might_contain(
     if len(set(terms)) != len(terms):
         raise ValueError("bloom_might_contain: probe_terms must be distinct")
     spark = bits.sparkSession
-    probes = spark.createDataFrame([(t,) for t in terms], "term string")
+    probes = local_frame(spark, [(t,) for t in terms], "term string")
     cells = probes.select(
         "term",
         F.explode(

@@ -96,11 +96,12 @@ def punct_ratio(col: Column) -> Column:
 def panel_hits(toks: Column, lang: str) -> Column:
     """|tokens ∩ panel| for one language over an ALREADY-SPLIT token array.
 
-    This is the single-split formulation the registered ``text_language_id``
-    entry uses (entry_queries._lang_id_query_sql generates its SQL from the
-    same LANG_STOPWORDS table): semantically identical to summing
-    ``array_contains`` per stopword — the panels are distinct words, so
-    |tokens ∩ panel| = Σ contains — but without re-splitting the text once
+    ``language_id`` scores every language with it, and the registered
+    ``text_language_id`` entry groups on ``language_id`` (its DuckDB oracle
+    is generated from the same LANG_STOPWORDS table).  Semantically
+    identical to summing ``array_contains`` per stopword — the panels are
+    distinct words, so |tokens ∩ panel| = Σ contains — but without
+    re-splitting the text once
     per stopword (~20 re-splits per row; 2× slower measured)."""
     words = LANG_STOPWORDS[lang]
     return F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in words])))
@@ -127,8 +128,7 @@ def language_id(col: Column) -> Column:
     All four per-language scores share ONE token-split subtree
     (``panel_hits`` over a single ``word_tokens`` Column) — identical
     subtrees collapse to one evaluation under Spark's subexpression
-    elimination, matching the single-split named-score plan of the
-    registered ``text_language_id`` entry.
+    elimination, so a row is split once, not once per stopword.
     """
     toks = word_tokens(col)
     guess = F.lit("und")

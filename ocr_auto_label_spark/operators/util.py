@@ -2,7 +2,12 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Iterable, Sequence
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -20,3 +25,22 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | StructType
+) -> DataFrame:
+    """A small driver-side frame (``rows`` of tuples in ``schema`` order),
+    built from an Arrow table.
+
+    ``spark.createDataFrame(list)`` is an RDD scan whose plan statistics
+    claim Long.MaxValue bytes, so the planner never broadcasts it and
+    broadcasts the other side of a join instead.  An Arrow table below
+    ``spark.sql.execution.arrow.localRelationThreshold`` becomes a
+    ``LocalRelation`` sized rows × row width (0 B when empty)."""
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return spark.createDataFrame(pa.table(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    ))

@@ -2,14 +2,15 @@
 deterministic split → benchmark decontamination → partitioned output.
 
 Chains the individually oracle-backed operators (textstats gates,
-exact-dup window, ``operators/sampling`` split + decontamination) the way
-a 100-TB curation run would:
+``operators.dedup.exact_dedup``, ``operators/sampling`` split +
+decontamination) the way a 100-TB curation run would:
 
 - **Stage 1** is one linear pass — gates are narrow column math, dedup is
   a single hash-window shuffle, the split is a pure projection — written
-  ``partitionBy(split)``.  Stage counts come from ``Observation`` metrics
-  collected during the write itself (zero re-scans; the chain is linear,
-  so each observe node fires exactly once).
+  ``partitionBy(split)``.  The input and gate counts are ``Observation``
+  metrics collected during the first job that runs the chain (no re-scan
+  of the input); the after-dedup and per-split counts are read off the
+  written ``curated`` table.
 - **Stage 2** reads the *written* table back for decontamination.  The
   materialize-between-stages boundary is deliberate: the contamination
   probe needs the corpus twice (train grams / eval grams), and re-reading
@@ -24,9 +25,12 @@ a 100-TB curation run would:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+import functools
+
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.observation import Observation
 
+from ocr_auto_label_spark.operators.dedup import exact_dedup
 from ocr_auto_label_spark.operators.sampling import (
     cross_split_contamination,
     deterministic_split,
@@ -38,6 +42,7 @@ from ocr_auto_label_spark.operators.textstats import (
     token_count,
     word_tokens,
 )
+from ocr_auto_label_spark.operators.util import local_frame
 
 # the documents and embeddings contract, and the one split layout
 ID_COL = "doc_id"
@@ -49,6 +54,11 @@ VEC_COL = "embedding"
 SPLIT_WEIGHTS = (80, 10, 10)
 SPLIT_NAMES = ("train", "val", "test")
 TRAIN = SPLIT_NAMES[0]
+# excluded while curate_corpus runs: see _observed_counts_survive
+_AQE_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+_AQE_EMPTY_RELATION = (
+    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+)
 
 
 def quality_gates(
@@ -73,20 +83,6 @@ def quality_gates(
         (quality_score(c) >= min_quality)
         & (real_tokens >= min_tokens)
         & (dup_word_frac(word_tokens(c)) <= max_dup_word_frac)
-    )
-
-
-def exact_dedup_rows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep one row (min id) per exact text duplicate group — the
-    row-preserving twin of ``operators.dedup.exact_dedup`` (which returns
-    group stats): one window shuffle on the content hash, no join."""
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(id_col)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
     )
 
 
@@ -144,6 +140,31 @@ def _keep_top_percent(
     return docs.join(keep, ID_COL, "left_semi"), int(thr["val"]), keep.count()
 
 
+def _observed_counts_survive(curate):
+    """Run ``curate(spark, ...)`` with AQE's empty-relation rule excluded,
+    then restore the session setting.  On an input the planner knows is
+    empty (``limit(0)``), the rule replaces the chain above the dedup
+    shuffle, stage Observations included, by an empty relation, and
+    ``Observation.get`` fails on the empty row it gets back.  Without the
+    rule every observed node runs; it only skips work on empty inputs."""
+
+    @functools.wraps(curate)
+    def run(spark: SparkSession, *args, **kwargs) -> dict:
+        before = spark.conf.get(_AQE_EXCLUDED_RULES, None)
+        rules = ",".join(r for r in (before, _AQE_EMPTY_RELATION) if r)
+        spark.conf.set(_AQE_EXCLUDED_RULES, rules)
+        try:
+            return curate(spark, *args, **kwargs)
+        finally:
+            if before is None:
+                spark.conf.unset(_AQE_EXCLUDED_RULES)
+            else:
+                spark.conf.set(_AQE_EXCLUDED_RULES, before)
+
+    return run
+
+
+@_observed_counts_survive
 def curate_corpus(
     spark: SparkSession,
     docs: DataFrame,
@@ -194,9 +215,10 @@ def curate_corpus(
     - ``bpe_merges``: trains on the train split, writes ``bpe_merges``/
       ``bpe_vocab``; their paths, ``bpe_vocab_size``.
     """
-    obs_in = Observation("curate_in")
-    obs_gated = Observation("curate_gated")
-    obs_dedup = Observation("curate_dedup")
+    # unnamed: a named Observation left registered by a call that raised
+    # blocks the next call's get of the same name
+    obs_in = Observation()
+    obs_gated = Observation()
 
     gated = quality_gates(
         docs.observe(obs_in, F.count(F.lit(1)).alias("rows")),
@@ -205,7 +227,7 @@ def curate_corpus(
         min_tokens=min_tokens,
         max_dup_word_frac=max_dup_word_frac,
     ).observe(obs_gated, F.count(F.lit(1)).alias("rows"))
-    deduped = exact_dedup_rows(gated, TEXT_COL, ID_COL)
+    deduped = exact_dedup(gated, TEXT_COL, ID_COL).drop("dup_count")
     sem_stats = {}
     if embeddings is not None:
         from ocr_auto_label_spark.operators.similarity import semdedup
@@ -244,7 +266,7 @@ def curate_corpus(
         # job (which would re-run the whole span chain just for two
         # sums); it fires on the first downstream action, and every
         # firing sees the same deterministic frame, so first-wins is safe
-        obs_span = Observation("curate_span")
+        obs_span = Observation()
         deduped = (
             deduped.drop(TEXT_COL)
             .join(
@@ -296,8 +318,10 @@ def curate_corpus(
         qm_path = f"{output_dir}/quality_model"
         _write_back(
             spark,
-            spark.createDataFrame(
-                [(b, qw[b]) for b in range(LR_BUCKETS)], "bucket int, w double"
+            local_frame(
+                spark,
+                [(b, qw[b]) for b in range(LR_BUCKETS)],
+                "bucket int, w double",
             ),
             qm_path,
         )
@@ -380,19 +404,15 @@ def curate_corpus(
         ).drop("mix_rank")
     assigned = deterministic_split(
         deduped, ID_COL, SPLIT_WEIGHTS, SPLIT_NAMES
-    ).observe(
-        obs_dedup,
-        F.count(F.lit(1)).alias("rows"),
-        *[
-            F.sum(F.when(F.col("split") == n, 1).otherwise(0)).alias(n)
-            for n in SPLIT_NAMES
-        ],
     )
     curated_path = f"{output_dir}/curated"
     written = _write_back(spark, assigned, curated_path, partition_by="split")
     if embeddings is not None:
         evict_ids.unpersist()
-    stage1 = obs_dedup.get
+    # counted on the written corpus: one pass over the curated artifact,
+    # none over the input
+    per_split = dict(written.groupBy("split").count().collect())
+    split_counts = {n: per_split.get(n, 0) for n in SPLIT_NAMES}
     mix_stats = {}
     if temperature_alpha is not None:
         # counted on the written corpus (the split drops no rows): the
@@ -532,17 +552,18 @@ def curate_corpus(
         # the driver (pytest identity against the greedy reference)
         from ocr_auto_label_spark.operators.bpe import bpe_train, bpe_vocab
 
-        if stage1[TRAIN]:
+        if split_counts[TRAIN]:
             train_docs = curated.filter(F.col("split") == TRAIN)
             merges, words = bpe_train(train_docs, bpe_merges, text_col=TEXT_COL)
         else:  # bpe_train raises on a corpus with no pairs to merge
-            merges, words = [], spark.createDataFrame(
-                [], "word string, cnt long, seq string"
+            merges, words = [], local_frame(
+                spark, [], "word string, cnt long, seq string"
             )
         merges_path = f"{output_dir}/bpe_merges"
         _write_back(
             spark,
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (m["step"], m["a"], m["b"], m["merged"], m["total"])
                     for m in merges
@@ -573,8 +594,8 @@ def curate_corpus(
         **mix_stats,
         "rows_in": obs_in.get["rows"],
         "rows_quality_pass": obs_gated.get["rows"],
-        "rows_after_dedup": stage1["rows"],
-        "split_counts": {n: stage1[n] for n in SPLIT_NAMES},
+        "rows_after_dedup": sum(per_split.values()),
+        "split_counts": split_counts,
         "eval_docs": int(contam["eval_docs"] or 0),
         "contaminated_docs": int(contam["contaminated_docs"] or 0),
         "contaminated_grams": int(contam["contaminated_grams"] or 0),

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from ocr_auto_label_spark.plans.curation_pipeline import (
     curate_corpus,
-    exact_dedup_rows,
     quality_gates,
 )
 from test_xxh64_sql import xxh64_ref
@@ -388,17 +387,6 @@ def test_misconfigured_optional_stages_raise(spark, tmp_path):
                       dsir_target_lang="en", dsir_keep_percent=100, **GATES)
 
 
-def test_exact_dedup_rows_keeps_min_id(spark):
-    df = spark.createDataFrame(
-        [(3, "same text"), (1, "same text"), (2, "other"), (7, "same text")],
-        "doc_id: long, text: string",
-    )
-    got = sorted(
-        (r.doc_id, r.text) for r in exact_dedup_rows(df).collect()
-    )
-    assert got == [(1, "same text"), (2, "other")]
-
-
 def test_quality_gates_drop_degenerate_docs(spark):
     df = spark.createDataFrame(
         [
@@ -477,6 +465,58 @@ def test_semantic_dedup_count_when_aqe_drops_the_anti_join(spark, tmp_path):
     _, _, want_evict = _py_semdedup(emb.collect())
     assert gated["rows_quality_pass"] == 0
     assert gated["semantic_evicted_ids"] == len({doc for _, doc in want_evict})
+
+
+def _without_paths(summary: dict) -> dict:
+    return {k: v for k, v in summary.items() if not k.endswith("_path")}
+
+
+def test_curation_after_a_failed_call_completes(spark, tmp_path):
+    """A call that raises after attaching its stage Observations (an empty
+    embeddings frame has no centroids) leaves nothing behind that the
+    next call waits on: the next call finishes in bounded time with the
+    summary a call before the failure reported."""
+    import threading
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    before = curate_corpus(spark, docs, str(tmp_path / "before"), **GATES)
+    with pytest.raises(ValueError, match="no vectors"):
+        curate_corpus(
+            spark, docs, str(tmp_path / "failed"), **GATES,
+            embeddings=emb.limit(0),
+        )
+    after = {}
+    call = threading.Thread(
+        target=lambda: after.update(
+            curate_corpus(spark, docs, str(tmp_path / "after"), **GATES)
+        ),
+        daemon=True,
+    )
+    call.start()
+    call.join(timeout=300)
+    assert not call.is_alive(), "curate_corpus blocked after a failed call"
+    assert _without_paths(after) == _without_paths(before)
+
+
+def test_curation_of_a_statically_empty_input_counts_zero(spark, tmp_path):
+    """``docs.limit(0)`` is empty at planning time, so AQE would replace
+    the whole chain above the dedup shuffle by an empty relation and the
+    stage Observations inside it would come back without a row.  Every
+    document count is 0; ``semantic_evicted_ids`` counts the embeddings'
+    own eviction list, which the documents do not change."""
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    sem = dict(embeddings=emb, semdedup_centroids=16, semdedup_threshold=0.3)
+    full = curate_corpus(spark, docs, str(tmp_path / "full"), **GATES, **sem)
+    empty = curate_corpus(
+        spark, docs.limit(0), str(tmp_path / "empty"), **GATES, **sem
+    )
+    assert empty["semantic_evicted_ids"] == full["semantic_evicted_ids"]
+    assert empty["split_counts"] == {"train": 0, "val": 0, "test": 0}
+    for key in ("rows_in", "rows_quality_pass", "rows_after_dedup",
+                "eval_docs", "contaminated_docs", "contaminated_grams"):
+        assert empty[key] == 0, key
 
 
 def test_curation_with_bpe_tokenizer_training(spark, tmp_path):

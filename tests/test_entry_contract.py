@@ -196,3 +196,41 @@ def test_bench_variant_breakdown_lists_are_live(spark):
         df = entry_mod.queries()[name](spark, SF_DIR)
         live = {r[0] for r in df.select("variant").distinct().collect()}
         assert set(variants) == live, f"{name}: bench list stale vs {live}"
+
+
+def _count_calls(monkeypatch, module, name: str) -> list:
+    """Wrap ``module.name`` with a call counter everywhere the package
+    holds it: its own module and every package module that imported the
+    name."""
+    import sys
+
+    original = getattr(module, name)
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return original(*args, **kwargs)
+
+    for mod in list(sys.modules.values()):
+        if (getattr(mod, "__name__", "").startswith("ocr_auto_label_spark")
+                and getattr(mod, name, None) is original):
+            monkeypatch.setattr(mod, name, counted)
+    return calls
+
+
+@pytest.mark.parametrize("module, name, entry", [
+    ("operators.dedup", "exact_dedup", "dedup_exact_hash"),
+    ("lineage", "_lineage_rows", "extract_lineage_stats"),
+    ("operators.textstats", "language_id", "text_language_id"),
+    ("operators.util", "local_frame", "x2_grammar_validate"),
+])
+def test_entry_runs_the_shipped_function(spark, monkeypatch, module, name, entry):
+    """The entry certifies the function the jobs call, not a restated
+    copy: building and running it goes through that function."""
+    import importlib
+
+    calls = _count_calls(
+        monkeypatch, importlib.import_module(f"ocr_auto_label_spark.{module}"), name
+    )
+    assert entry_mod.queries()[entry](spark, SF_DIR).count() > 0
+    assert len(calls) >= 1, f"{entry} never called {module}.{name}"

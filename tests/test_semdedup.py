@@ -124,35 +124,6 @@ def test_keep_block_cols_preserves_pair_schema(spark):
     assert base.count() == kept.count()
 
 
-def test_joined_assign_equals_literal_fold(spark):
-    """The large-k broadcast-join + max_by assignment path produces
-    byte-identical (cluster, score) to the literal-fold path — the
-    promised scale migration changes the plan, never the answer."""
-    from ocr_auto_label_spark.operators.similarity import semdedup_assign_joined
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    lit = {r.vec_id: (r.sd_cluster, r.sd_cos)
-           for r in semdedup_assign(emb, n_centroids=K).collect()}
-    joined = {r.vec_id: (r.sd_cluster, r.sd_cos)
-              for r in semdedup_assign_joined(emb, n_centroids=K).collect()}
-    assert joined == lit
-
-
-def test_joined_assign_single_shuffle(spark):
-    """Plan shape of the large-k path: the centroid side is broadcast
-    and the only key shuffle is the per-id partial-aggregated max —
-    shuffle volume is one row per input row regardless of k."""
-    from ocr_auto_label_spark.operators.similarity import semdedup_assign_joined
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    df = semdedup_assign_joined(emb, n_centroids=K)
-    df.count()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Broadcast" in plan
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "partial_max" in plan.lower() or "partial" in plan.lower()
-
-
 def test_semantic_dup_clusters_via_connected_components(spark):
     """Composition: SemDeDup pair evidence → duplicate CLUSTERS via
     connected_components (pointer-jumping min-label), checked against a
