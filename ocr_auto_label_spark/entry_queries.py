@@ -91,8 +91,8 @@ def _textstats_duck() -> str:
     word_band = f"(CASE WHEN {mean_word} >= 3 AND {mean_word} <= 12 THEN 1.0 ELSE 0.4 END)"
     quality = f"0.4 * {length_band} + 0.3 * (1 - {pr}) + 0.3 * {word_band}"
     bpe = f"len(regexp_extract_all(text, '{_BPE_PIECE_RX}', 0))"
-    # CAST to DOUBLE: DuckDB parses 0.4-style literals as DOUBLE already;
-    # the cast keeps the output types in the driver-hash-safe family
+    # CAST to DOUBLE: 0.4-style literals are DECIMAL, and the driver's
+    # value hash needs the DOUBLE family the Spark leg emits
     return (
         "SELECT lang, "
         f"CAST(round(avg({tc}), 4) AS DOUBLE) AS avg_tokens, "
